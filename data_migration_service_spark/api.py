@@ -1151,19 +1151,18 @@ class EngineGroup:
         Catalyst cannot see the engine's bucket layout through parquet-dir
         views, so a naive equi-join between co-located group tables pays
         one shuffle exchange per side even though none is needed. When
-        `aligned="auto"` (the default) and the query is an inner
+        `aligned="auto"` (the default) and the query is an inner or LEFT
         equi-join chain over co-located group tables whose keys cover the
         shared layout columns, the join is planned through
         `colocated_join_many` instead — zero exchanges on compacted
         tables — and the query's remaining clauses run over that result
-        (`tables/sql_route.py` documents the exact routable envelope and
-        the `_rK` collision-rename mapping). Queries outside the envelope
+        (`tables/sql_route.py` documents the exact routable envelope;
+        `tables/colocated.collision_renames` the `_rK` collision renames). Queries outside the envelope
         fall back to the naive plan unchanged. `aligned="require"` raises
         ValueError with the precise refusal reason instead of falling
         back — the lever for callers who must not ship a shuffled plan
         silently; `aligned="off"` disables routing. The explicit escape
-        hatches remain: `group.colocated_join(a, b, on=...)` /
-        `group.colocated_join_many([...], on=...)`.
+        hatch remains: `group.colocated_join_many([a, b, ...], on=...)`.
         Pinned by tests/test_sql_route.py (zero Exchange on a plain SQL
         join, equality with the aligned="off" plan) and
         tests/test_colocated.py."""
@@ -1202,23 +1201,6 @@ class EngineGroup:
         finally:
             for name in self.engines:
                 self.spark.catalog.dropTempView(name)
-
-    def colocated_join(self, left: str, right: str, **kw) -> DataFrame:
-        """Bucket-aligned join of two co-located tables of the group
-        (tables/colocated.colocated_join) — the shuffle-free alternative
-        to joining the `sql()` views when both sides share layout columns
-        and bucket count. Raises with the misalignment reason otherwise,
-        so a caller can fall back to `sql()` knowingly."""
-        from data_migration_service_spark.tables.colocated import (
-            colocated_join,
-        )
-
-        for n in (left, right):
-            if n not in self.engines:
-                raise KeyError(f"unknown table '{n}' "
-                               f"(configured: {sorted(self.engines)})")
-        return colocated_join(self.engines[left].table,
-                              self.engines[right].table, **kw)
 
     def colocated_join_many(self, names: list[str], **kw) -> DataFrame:
         """Bucket-aligned join across N co-located group tables in one

@@ -9,24 +9,33 @@ cannot see the parquet layout through the engine's manifest — which at
 100 TB is the single largest avoidable exchange class (e.g. a CDC table
 joined with its derived chunk table on every downstream read).
 
-`colocated_join` plans the join the way Iceberg's storage-partitioned
-join does: one join per common bucket over the two single-bucket reads,
-unioned. The per-bucket right side is broadcast when it fits a size gate
-(on-disk bytes from the manifest's file listing ≤ `broadcast_bytes_limit`
-— one bucket is 1/n_buckets of a table, so in the pruned-lookup/
-maintenance shape it always fits), making the plan shuffle-free on
-compacted tables: scan ⋈ broadcast-scan per bucket. An over-limit bucket
-falls back to a plain shuffled join for that pair alone — correct, and
-still bounded to one bucket's key space. Delta-carrying buckets add only
-their own MOR reduce, still bucket-local.
+`colocated_join_many` plans the join the way Iceberg's storage-partitioned
+join does, with one read→rename→join fold over 2..N tables and two plans:
+
+- whole-table: when every non-first table fits the broadcast size gate
+  in total (on-disk bytes from the manifest's file listing times
+  `BROADCAST_EXPANSION` ≤ `BROADCAST_BYTES_LIMIT`), one fold over the
+  whole tables with every right side broadcast — shuffle-free, one scan
+  per table;
+- per-bucket: otherwise (or when `buckets=` is given), one fold per
+  common bucket over the single-bucket reads, unioned. Each right bucket
+  is broadcast when it alone fits the gate; an over-limit bucket falls
+  back to a plain shuffled join for that bucket alone — correct, and
+  still bounded to one bucket's key space. Delta-carrying buckets add
+  only their own MOR reduce, still bucket-local.
+
+Non-join columns colliding with the joined output so far are renamed
+`{col}_r{k}` (k = table position) by `collision_renames`, the one rule
+the SQL router (tables/sql_route.py) also maps its references through.
 
 Scale envelope — explicit, not silent:
 
-- The plan holds one join node per bucket, so the driver caps it at
-  `max_plan_buckets` and raises past that, telling the caller to batch by
-  bucket ranges — exactly how `rewrite_buckets` runs table-wide
+- The per-bucket plan holds one join tree per bucket, so the driver caps
+  it at `MAX_PLAN_BUCKETS` and raises past that, telling the caller to
+  batch by bucket ranges — exactly how `rewrite_buckets` runs table-wide
   maintenance (a rolling background pass), and what a pruned lookup does
-  naturally (its bucket set is already small).
+  naturally (its bucket set is already small). The whole-table plan
+  builds no per-bucket trees, so the cap does not apply to it.
 - Hot-bucket skew: an aligned join has NO shuffle to salt, so a bucket
   holding half the table gets its parallelism from FILE-level splits —
   the writer's `target_file_rows` prop and hot-bucket salt fan-out
@@ -36,7 +45,7 @@ Scale envelope — explicit, not silent:
   into one straggler task; on the shuffled (over-broadcast-limit)
   fallback, AQE's skew-join split applies as usual. Pinned by
   tests/test_colocated.py::test_hot_bucket_pair_parallelizes_by_file_splits.
-- On a real Iceberg deployment this function disappears into
+- On a real Iceberg deployment this module disappears into
   `spark.sql.sources.v2.bucketing.enabled` (SPJ); the engine-level
   contract (which joins are alignable) is identical.
 
@@ -58,9 +67,12 @@ from data_migration_service_spark.tables.lake import Snapshot, SnapshotTable
 # number available without a footer parse or Spark job). Text-heavy
 # buckets commonly expand 5-20x when materialized, so the size gate
 # multiplies the on-disk estimate by this conservative expansion factor
-# before comparing against broadcast_bytes_limit — a 64MB limit admits
+# before comparing against BROADCAST_BYTES_LIMIT — a 64MB limit admits
 # buckets up to ~8MB on disk (round-4 advisor finding).
 BROADCAST_EXPANSION = 8.0
+BROADCAST_BYTES_LIMIT = 64 << 20
+# per-bucket plans past this many bucket joins raise (run bucket ranges)
+MAX_PLAN_BUCKETS = 256
 
 
 def alignment(left: Snapshot, right: Snapshot,
@@ -84,84 +96,25 @@ def _populated(snap: Snapshot) -> set[int]:
     return set(snap.buckets) | {b for b, d in snap.deltas.items() if d}
 
 
-def colocated_join(
-    left: SnapshotTable,
-    right: SnapshotTable,
-    on: list[str] | None = None,
-    how: str = "inner",
-    buckets: list[int] | None = None,
-    left_columns: list[str] | None = None,
-    right_columns: list[str] | None = None,
-    right_suffix: str = "_r",
-    max_plan_buckets: int = 256,
-    broadcast_bytes_limit: int = 64 << 20,
-) -> DataFrame:
-    """Equi-join two co-located tables bucket-by-bucket, shuffle-free.
-
-    `on` defaults to the shared layout columns. `how`: "inner" (common
-    populated buckets) or "left" (all left populated buckets; right reads
-    of unpopulated buckets are empty). Non-join columns present on BOTH
-    sides are renamed with `right_suffix` on the right (both tables carry
-    an LSN column, so collisions are the norm, not the exception).
-
-    `buckets` restricts the join to a bucket subset — the pruned-lookup
-    composition (probe the keys, join only the hit buckets) and the
-    batching lever once a full-table join exceeds `max_plan_buckets`.
-
-    Broadcast size gate: each right bucket is broadcast ONLY when its
-    estimated IN-MEMORY footprint — compressed on-disk bytes (base +
-    delta parquet, from the manifest's file listing, no Spark job) times
-    `BROADCAST_EXPANSION` — is at most `broadcast_bytes_limit`;
-    past the limit that bucket-pair falls back to a plain shuffled join,
-    which stays correct and bucket-bounded — the same size-gate
-    discipline as operators/merge.maybe_broadcast_keys. Round-3 verdict:
-    the previous unconditional broadcast was an OOM at the module's own
-    ~6 GB/bucket design point.
-
-    Pinned by tests/test_colocated.py: zero "Exchange hashpartitioning"
-    nodes on compacted sides, result equality with the naive shuffled
-    join, and the oversized-bucket fallback (result-equal, un-hinted).
-    """
-    lsnap, rsnap = left.current(), right.current()
-    on = list(on) if on is not None else lsnap.layout_cols()
-    reason = alignment(lsnap, rsnap, on)
-    if reason is not None:
-        raise ValueError(f"not bucket-aligned: {reason}")
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be inner or left, got {how!r}")
-
-    lpop, rpop = _populated(lsnap), _populated(rsnap)
-    todo = sorted(lpop & rpop) if how == "inner" else sorted(lpop)
-    if buckets is not None:
-        todo = sorted(set(todo) & set(buckets))
-    if len(todo) > max_plan_buckets:
-        raise ValueError(
-            f"{len(todo)} bucket joins exceed max_plan_buckets="
-            f"{max_plan_buckets}; run in bucket ranges (pass buckets=) as "
-            f"a rolling pass, or raise the cap if the driver can hold the "
-            f"plan")
-
-    def bucket_pair(b: int) -> DataFrame:
-        l = left.read(snapshot=lsnap, buckets=[b], columns=left_columns)
-        r = right.read(snapshot=rsnap, buckets=[b], columns=right_columns)
-        for c in r.columns:
-            if c in l.columns and c not in on:
-                r = r.withColumnRenamed(c, c + right_suffix)
-        # broadcast the right bucket only under the size gate: one bucket
-        # is the small unit by construction in the pruned-lookup shape,
-        # but an unconditional broadcast is an OOM on fat buckets; the
-        # expansion factor converts on-disk (compressed) bytes to an
-        # in-memory estimate — what broadcast OOM risk actually scales with
-        if (right.bucket_bytes_estimate(rsnap, b) * BROADCAST_EXPANSION
-                <= broadcast_bytes_limit):
-            r = F.broadcast(r)
-        return l.join(r, on, how)
-
-    parts = [bucket_pair(b) for b in todo]
-    if not parts:
-        # schema-correct empty result (e.g. empty tables)
-        return bucket_pair(0).limit(0)
-    return reduce(lambda a, b: a.unionByName(b), parts)
+def collision_renames(cols_per_table: list[list[str]],
+                      on: list[str]) -> dict[tuple[int, str], str]:
+    """Output name of every column of an aligned join, keyed by (table
+    position, lowercased column): table k's non-key column c becomes
+    `{c}_r{k}` iff it collides with the joined output of tables 0..k-1
+    (earlier renames included). Names compare case-insensitively, like
+    Spark's default resolution, so `lang` and `Lang` collide too."""
+    on_lower = {c.lower() for c in on}
+    ren: dict[tuple[int, str], str] = {}
+    acc_lower: set[str] = set()
+    for k, cols in enumerate(cols_per_table):
+        for c in cols:
+            cl = c.lower()
+            name = c
+            if k and cl not in on_lower and cl in acc_lower:
+                name = f"{c}_r{k}"
+            ren[(k, cl)] = name
+            acc_lower.add(name.lower())
+    return ren
 
 
 def colocated_join_many(
@@ -169,31 +122,37 @@ def colocated_join_many(
     on: list[str] | None = None,
     how: str = "inner",
     buckets: list[int] | None = None,
-    columns: list[list[str] | None] | None = None,
-    max_plan_buckets: int = 256,
-    broadcast_bytes_limit: int = 64 << 20,
     snapshots: list[Snapshot] | None = None,
 ) -> DataFrame:
-    """Bucket-aligned equi-join across N co-located tables in ONE pass.
+    """Bucket-aligned equi-join across 2..N co-located tables, shuffle-free.
 
-    The pairwise `colocated_join` composed naively (join(join(a, b), c))
-    re-plans bucket unions between steps; this folds all N single-bucket
-    reads per bucket instead — still zero shuffle exchanges on compacted
-    tables, one join tree per bucket, unioned. Every table must be
-    pairwise bucket-aligned on `on` (defaults to the first table's layout
-    columns); raises with the first misalignment reason otherwise — the
-    same contract `EngineGroup.sql` documents as its escape hatch for
+    Every table must be pairwise bucket-aligned on `on` (defaults to the
+    first table's layout columns); raises with the first misalignment
+    reason otherwise — the same contract `EngineGroup.sql` documents for
     plain-SQL joins over group views (which Catalyst cannot see the
-    manifest layout through, so they pay N-1 exchanges).
+    manifest layout through, so they pay N-1 exchanges). `how`: "inner"
+    (common populated buckets) or "left" (all of the first table's
+    populated buckets; right reads of unpopulated buckets are empty).
+    Colliding non-join columns are renamed by `collision_renames`.
 
-    Non-join columns colliding with an earlier table's are renamed with
-    a positional `_rK` suffix (table k >= 1). `columns` optionally gives a
-    per-table scan projection (None = all). The per-bucket right sides
-    are broadcast under the same size gate as `colocated_join`.
+    `buckets` restricts the join to a bucket subset — the pruned-lookup
+    composition (probe the keys, join only the hit buckets) and the
+    batching lever once a per-bucket join exceeds `MAX_PLAN_BUCKETS`.
     `snapshots` pins each table to a specific snapshot (positional,
     len == len(tables)) — `EngineGroup.sql(catalog_root=...)` routes
     through here with the group-transaction pins so an aligned read is
     exactly as consistent as the naive view read it replaces.
+
+    Broadcast size gate: a right side is broadcast ONLY when its
+    estimated IN-MEMORY footprint — compressed on-disk bytes (base +
+    delta parquet, from the manifest's file listing, no Spark job) times
+    `BROADCAST_EXPANSION` — is at most `BROADCAST_BYTES_LIMIT`; past the
+    limit that bucket falls back to a plain shuffled join, the same
+    size-gate discipline as operators/merge.maybe_broadcast_keys.
+
+    Pinned by tests/test_colocated.py: zero "Exchange hashpartitioning"
+    nodes on compacted sides, result equality with the naive shuffled
+    join, and the oversized-bucket fallback (result-equal, un-hinted).
 
     Reference parity: none (engine-added scale feature).
     """
@@ -210,60 +169,54 @@ def colocated_join_many(
         reason = alignment(snaps[0], s, on)
         if reason is not None:
             raise ValueError(f"table {i} not bucket-aligned: {reason}")
-    if columns is None:
-        columns = [None] * len(tables)
+
+    def fits(k: int, bucket_ids) -> bool:
+        return (sum(tables[k].bucket_bytes_estimate(snaps[k], b)
+                    for b in bucket_ids)
+                * BROADCAST_EXPANSION <= BROADCAST_BYTES_LIMIT)
+
+    def fold(bucket: int | None) -> DataFrame:
+        # bucket=None reads whole tables and runs only once every right
+        # side fits the gate whole; the broadcast decision is the only
+        # other difference between the two plans
+        sel = None if bucket is None else [bucket]
+        reads = [t.read(snapshot=s, buckets=sel)
+                 for t, s in zip(tables, snaps)]
+        ren = collision_renames([r.columns for r in reads], on)
+        acc = reads[0]
+        for k in range(1, len(reads)):
+            r = reads[k].toDF(*[ren[(k, c.lower())]
+                                for c in reads[k].columns])
+            if bucket is None or fits(k, [bucket]):
+                r = F.broadcast(r)
+            acc = acc.join(r, on, how)
+        return acc
+
+    # Small-side fast path: when EVERY non-first table fits the broadcast
+    # gate in TOTAL, the per-bucket split only adds plan overhead (one
+    # join tree + one broadcast per bucket) — a single whole-table
+    # broadcast join is equally shuffle-free and schedules as one scan
+    # per table. Inner/left per-bucket unions and the whole-table join
+    # agree exactly (bucket intersection is an optimization, not a
+    # semantic), so results are identical.
+    if buckets is None and all(
+            fits(k, _populated(snaps[k])) for k in range(1, len(tables))):
+        return fold(None)
 
     pops = [_populated(s) for s in snaps]
     todo = set(pops[0])
     if how == "inner":
         for p in pops[1:]:
             todo &= p
-    todo = sorted(todo)
     if buckets is not None:
-        todo = sorted(set(todo) & set(buckets))
-    if len(todo) > max_plan_buckets:
+        todo &= set(buckets)
+    todo = sorted(todo)
+    if len(todo) > MAX_PLAN_BUCKETS:
         raise ValueError(
-            f"{len(todo)} bucket joins exceed max_plan_buckets="
-            f"{max_plan_buckets}; run in bucket ranges (pass buckets=)")
-
-    # Small-side fast path: when EVERY non-first table fits the broadcast
-    # gate in TOTAL, the per-bucket split only adds plan overhead (one
-    # join node + one broadcast per bucket) — a single whole-table
-    # broadcast join is equally shuffle-free and schedules as one scan
-    # per table. Inner/left per-bucket unions and the whole-table join
-    # agree exactly (bucket intersection is an optimization, not a
-    # semantic), so results are identical; the per-bucket path remains
-    # for the only regime it exists for: sides too big to broadcast.
-    if buckets is None and all(
-        sum(t.bucket_bytes_estimate(s, b) for b in _populated(s))
-        * BROADCAST_EXPANSION <= broadcast_bytes_limit
-        for t, s in zip(tables[1:], snaps[1:])
-    ):
-        acc = tables[0].read(snapshot=snaps[0], columns=columns[0])
-        for k in range(1, len(tables)):
-            r = tables[k].read(snapshot=snaps[k], columns=columns[k])
-            for c in r.columns:
-                if c in acc.columns and c not in on:
-                    r = r.withColumnRenamed(c, f"{c}_r{k}")
-            acc = acc.join(F.broadcast(r), on, how)
-        return acc
-
-    def bucket_tree(b: int) -> DataFrame:
-        acc = tables[0].read(snapshot=snaps[0], buckets=[b],
-                             columns=columns[0])
-        for k in range(1, len(tables)):
-            r = tables[k].read(snapshot=snaps[k], buckets=[b],
-                               columns=columns[k])
-            for c in r.columns:
-                if c in acc.columns and c not in on:
-                    r = r.withColumnRenamed(c, f"{c}_r{k}")
-            if (tables[k].bucket_bytes_estimate(snaps[k], b)
-                    * BROADCAST_EXPANSION <= broadcast_bytes_limit):
-                r = F.broadcast(r)
-            acc = acc.join(r, on, how)
-        return acc
-
-    parts = [bucket_tree(b) for b in todo]
+            f"{len(todo)} bucket joins exceed MAX_PLAN_BUCKETS="
+            f"{MAX_PLAN_BUCKETS}; run in bucket ranges (pass buckets=)")
+    parts = [fold(b) for b in todo]
     if not parts:
-        return bucket_tree(0).limit(0)
+        # schema-correct empty result (e.g. empty tables)
+        return fold(0).limit(0)
     return reduce(lambda a, b: a.unionByName(b), parts)

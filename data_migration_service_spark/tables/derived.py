@@ -336,20 +336,20 @@ class DerivedTable:
     def read(self, **kw) -> DataFrame:
         return self.table.read(**kw)
 
-    def join_source(self, source: SnapshotTable, how: str = "inner",
-                    **kw) -> DataFrame:
+    def join_source(self, source: SnapshotTable,
+                    how: str = "inner") -> DataFrame:
         """Derived rows joined back to their source rows, bucket-aligned.
 
         The derived table is bucketed by the SOURCE key prefix (create()),
         so when its n_buckets matches the source's the join runs
-        shuffle-free per bucket (tables/colocated.colocated_join): the
+        shuffle-free (tables/colocated.colocated_join_many): the
         chunk⋈document read that every RAG/export pipeline ends with costs
         zero exchanges instead of two full-table shuffles. Source columns
-        keep their names; colliding derived columns get the "_r" suffix
+        keep their names; colliding derived columns get the "_r1" suffix
         (notably the LSN)."""
         from data_migration_service_spark.tables.colocated import (
-            colocated_join,
+            colocated_join_many,
         )
 
-        return colocated_join(source, self.table, on=self.source_keys,
-                              how=how, **kw)
+        return colocated_join_many([source, self.table],
+                                   on=self.source_keys, how=how)

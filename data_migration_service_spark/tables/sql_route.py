@@ -28,13 +28,16 @@ USING column list), the SAME equality set on every join, and that set
 covering the shared layout columns. All joins in a chain must share one
 type (all inner or all LEFT). Under LEFT JOIN, a qualified reference to
 a RIGHT side's join key (b.k) refuses routing — it is NULL on unmatched
-rows while the merged key is not. When every join uses USING syntax,
-bare references to the join columns are legal (USING merges them),
-exactly as in plain Spark SQL. Non-join columns that collide across
-tables are renamed
-`{col}_r{k}` by `colocated_join_many` (k = 1-based table position in the
-FROM chain); qualified references in the outer clauses are rewritten to
-the post-join names, so `SELECT a.lsn, b.lsn FROM ...` keeps working.
+rows while the merged key is not — and so does an ON equality that does
+not pair the first table with the joined one (`... LEFT JOIN c ON
+b.k = c.k`): the routed plan joins every table on the merged key. When
+every join uses USING syntax, bare references to the join columns are
+legal (USING merges them), exactly as in plain Spark SQL. Non-join
+columns that collide across tables are renamed `{col}_r{k}` (k = the
+table's position in the FROM chain, the first being 0) by
+`colocated.collision_renames`, the rule `colocated_join_many` applies;
+qualified references in the outer clauses are rewritten to the
+post-join names, so `SELECT a.lsn, b.lsn FROM ...` keeps working.
 Bare references that the original query could resolve only by qualifier
 (ambiguous across tables) refuse routing — the naive plan then raises
 the same AnalysisException plain Spark SQL would.
@@ -49,6 +52,7 @@ tables/colocated.py).
 from __future__ import annotations
 
 import re
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -199,9 +203,12 @@ def _parse_relation(c: _Cursor) -> tuple[str, str]:
 
 
 def _parse_on(toks: list[_Tok], known_aliases: set[str],
-              new_alias: str) -> list[str]:
+              new_alias: str, left_first: str | None = None) -> list[str]:
     """Parse a conjunction of same-named qualified equalities; return the
-    equality column names (lowercase, in appearance order)."""
+    equality column names (lowercase, in appearance order). Under LEFT
+    JOIN (`left_first` = the first table's alias) every equality must
+    pair that table with `new_alias`: a middle table's key is NULL where
+    it did not match, while the routed plan joins on the merged key."""
     # strip balanced parens wrapping the WHOLE condition:
     # ON (a.k = b.k AND a.x = b.x)
     while (len(toks) >= 2 and toks[0].text == "(" and toks[-1].text == ")"):
@@ -246,6 +253,12 @@ def _parse_on(toks: list[_Tok], known_aliases: set[str],
             raise Unroutable(f"unknown alias in ON ({a1} / {a2})")
         if a1 == a2:
             raise Unroutable("ON equality within one table")
+        if left_first is not None and {a1, a2} != {left_first, new_alias}:
+            raise Unroutable(
+                f"LEFT JOIN ON {a1}.{c1} = {a2}.{c2} does not pair the "
+                f"first table with {new_alias}; write {left_first}.{c1} = "
+                f"{new_alias}.{c1} (a middle table's key is NULL where it "
+                f"did not match)")
         saw_new = saw_new or new_alias in (a1, a2)
         if c1.lower() not in cols:
             cols.append(c1.lower())
@@ -319,8 +332,9 @@ def parse(sql: str) -> _Parsed:
             else:
                 c.expect_kw("on")
                 cond = c.take_until_kw(_JOIN_BREAKERS)
-                joins.append(_parse_on(cond, aliases | {alias.lower()},
-                                       alias.lower()))
+                joins.append(_parse_on(
+                    cond, aliases | {alias.lower()}, alias.lower(),
+                    p.tables[0][1].lower() if how == "left" else None))
                 usings.append(False)
             hows.append(how)
             p.tables.append((name, alias))
@@ -376,28 +390,6 @@ def parse(sql: str) -> _Parsed:
         if any(_is_kw(t, "select") for t in clause):
             raise Unroutable("subquery outside FROM is not routable")
     return p
-
-
-def _simulate_renames(cols_per_table: list[list[str]],
-                      on_lower: set[str]) -> dict[tuple[int, str], str]:
-    """Mirror colocated_join_many's collision renaming exactly: table k's
-    column c becomes c_r{k} iff c collides with the accumulated output at
-    step k and is not a join key."""
-    ren: dict[tuple[int, str], str] = {}
-    acc_lower: set[str] = set()
-    for c in cols_per_table[0]:
-        ren[(0, c.lower())] = c
-        acc_lower.add(c.lower())
-    for k in range(1, len(cols_per_table)):
-        for c in cols_per_table[k]:
-            cl = c.lower()
-            if cl in on_lower:
-                ren[(k, cl)] = c
-                continue
-            name = f"{c}_r{k}" if cl in acc_lower else c
-            ren[(k, cl)] = name
-            acc_lower.add(name.lower())
-    return ren
 
 
 def _select_aliases(select: list[_Tok]) -> set[str]:
@@ -495,6 +487,7 @@ def route_aligned_sql(spark, engines: dict, query: str,
     the caller decides whether that falls back (aligned="auto") or
     surfaces (aligned="require")."""
     from data_migration_service_spark.tables.colocated import (
+        collision_renames,
         colocated_join_many,
     )
     from data_migration_service_spark.tables.lake import (
@@ -543,7 +536,7 @@ def route_aligned_sql(spark, engines: dict, query: str,
         raise Unroutable(str(e)) from e
 
     on_lower = {c.lower() for c in on_cols}
-    ren = _simulate_renames(cols_per_table, on_lower)
+    ren = collision_renames(cols_per_table, on_cols)
     alias_pos = {a.lower(): k for k, (_n, a) in enumerate(p.tables)}
     # table names double as qualifiers when no alias was given; when an
     # alias IS given, SQL hides the table name — alias_pos covers both
@@ -553,7 +546,10 @@ def route_aligned_sql(spark, engines: dict, query: str,
                                on_lower, ren, skip_bare,
                                using=p.using, how=p.how)
     sel = rw(p.select)
-    parts = [f"SELECT {sel} FROM __dms_aligned_src__"]
+    # one view name per call: concurrent callers on one session must not
+    # replace (or drop) each other's joined source
+    view = f"__dms_aligned_src_{uuid.uuid4().hex}__"
+    parts = [f"SELECT {sel} FROM {view}"]
     if p.where:
         parts.append(f"WHERE {rw(p.where)}")
     if p.group:
@@ -565,8 +561,8 @@ def route_aligned_sql(spark, engines: dict, query: str,
     if p.limit:
         parts.append(f"LIMIT {rw(p.limit)}")
     outer = " ".join(parts)
-    joined.createOrReplaceTempView("__dms_aligned_src__")
+    joined.createOrReplaceTempView(view)
     try:
         return spark.sql(outer)
     finally:
-        spark.catalog.dropTempView("__dms_aligned_src__")
+        spark.catalog.dropTempView(view)

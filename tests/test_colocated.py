@@ -9,9 +9,10 @@ from pyspark.sql import functions as F
 from data_migration_service_spark.config import EngineConfig
 from data_migration_service_spark.fixtures.cdc import gen_changes
 from data_migration_service_spark.operators.merge import cdc_apply, compact
+from data_migration_service_spark.tables import colocated
 from data_migration_service_spark.tables.colocated import (
     alignment,
-    colocated_join,
+    colocated_join_many,
 )
 from data_migration_service_spark.tables.derived import DerivedTable
 from tests.test_merge import TABLE_SCHEMA, make_table
@@ -62,12 +63,12 @@ def test_colocated_rows_share_buckets(rig):
 
 def test_colocated_join_no_shuffle_and_equals_naive(rig):
     t, d, _ = rig
-    joined = colocated_join(t, d.table, on=["repo", "path"])
+    joined = colocated_join_many([t, d.table], on=["repo", "path"])
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan, plan[:4000]
 
     naive = t.read().join(
-        d.read().withColumnRenamed("lsn", "lsn_r"), ["repo", "path"])
+        d.read().withColumnRenamed("lsn", "lsn_r1"), ["repo", "path"])
     cols = sorted(naive.columns)
     a, b = joined.select(*cols), naive.select(*cols)
     assert a.count() == b.count() > 0
@@ -77,19 +78,21 @@ def test_colocated_join_no_shuffle_and_equals_naive(rig):
 
 def test_colocated_join_left_and_bucket_subset(rig):
     t, d, _ = rig
-    full = colocated_join(t, d.table, on=["repo", "path"], how="left")
+    full = colocated_join_many([t, d.table], on=["repo", "path"],
+                               how="left")
     # every live source row appears (chunked docs 1:N, empty docs 1:1 null)
     assert (full.select("repo", "path").distinct().count()
             == t.read().select("repo", "path").distinct().count())
     from data_migration_service_spark.tables.lake import bucket_expr
 
-    sub = colocated_join(t, d.table, on=["repo", "path"], buckets=[0, 1])
+    sub = colocated_join_many([t, d.table], on=["repo", "path"],
+                              buckets=[0, 1])
     got = (sub.select(bucket_expr(["repo", "path"], 8).alias("b"))
            .distinct().collect())
     assert {r["b"] for r in got} <= {0, 1} and got
 
 
-def test_broadcast_size_gate_falls_back_and_matches(rig):
+def test_broadcast_size_gate_falls_back_and_matches(rig, monkeypatch):
     """Round-3 verdict item: an over-limit right bucket must NOT be
     force-broadcast. With the gate forced to 0 bytes every bucket-pair
     takes the shuffled fallback (no broadcast hint survives into the
@@ -101,9 +104,9 @@ def test_broadcast_size_gate_falls_back_and_matches(rig):
         # rule out Catalyst choosing broadcast on its own size estimate —
         # the gate's job is only to stop the FORCED hint
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        hinted = colocated_join(t, d.table, on=["repo", "path"])
-        gated = colocated_join(t, d.table, on=["repo", "path"],
-                               broadcast_bytes_limit=0)
+        hinted = colocated_join_many([t, d.table], on=["repo", "path"])
+        monkeypatch.setattr(colocated, "BROADCAST_BYTES_LIMIT", 0)
+        gated = colocated_join_many([t, d.table], on=["repo", "path"])
         hplan = hinted._jdf.queryExecution().executedPlan().toString()
         gplan = gated._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in hplan, hplan[:4000]
@@ -125,11 +128,32 @@ def test_misalignment_raises(spark, tmp_path, rig):
     t, d, _ = rig
     other = make_table(spark, tmp_path / "other", n_buckets=16)
     with pytest.raises(ValueError, match="bucket counts differ"):
-        colocated_join(t, other, on=["repo", "path"])
+        colocated_join_many([t, other], on=["repo", "path"])
     with pytest.raises(ValueError, match="do not cover"):
-        colocated_join(t, d.table, on=["repo"])
-    with pytest.raises(ValueError, match="max_plan_buckets"):
-        colocated_join(t, d.table, on=["repo", "path"], max_plan_buckets=2)
+        colocated_join_many([t, d.table], on=["repo"])
+
+
+def test_bucket_cap_applies_to_per_bucket_plan_only(rig, monkeypatch):
+    """MAX_PLAN_BUCKETS bounds the per-bucket plan only: the whole-table
+    broadcast plan builds no per-bucket join trees, so a small table with
+    more populated buckets than the cap still joins; forcing the
+    per-bucket plan (buckets=, or a broadcast gate of 0) still raises."""
+    t, d, _ = rig
+    monkeypatch.setattr(colocated, "MAX_PLAN_BUCKETS", 2)
+    assert len(colocated._populated(t.current())) > 2
+    j = colocated_join_many([t, d.table], on=["repo", "path"])
+    # the rolling pass the cap asks for returns the same rows
+    batched = sum(
+        colocated_join_many([t, d.table], on=["repo", "path"],
+                            buckets=[b, b + 1]).count()
+        for b in range(0, 8, 2))
+    assert j.count() == batched > 0
+    with pytest.raises(ValueError, match="MAX_PLAN_BUCKETS"):
+        colocated_join_many([t, d.table], on=["repo", "path"],
+                            buckets=[0, 1, 2])
+    monkeypatch.setattr(colocated, "BROADCAST_BYTES_LIMIT", 0)
+    with pytest.raises(ValueError, match="MAX_PLAN_BUCKETS"):
+        colocated_join_many([t, d.table], on=["repo", "path"])
 
 
 def test_join_source_facade(rig):
@@ -137,7 +161,7 @@ def test_join_source_facade(rig):
     j = d.join_source(t)
     assert "chunk_text" in j.columns and "content" in j.columns
     # derived LSN renamed, source LSN kept
-    assert "lsn" in j.columns and "lsn_r" in j.columns
+    assert "lsn" in j.columns and "lsn_r1" in j.columns
     # chunks reassemble into their documents — end-to-end value check
     rebuilt = (j.groupBy("repo", "path", "content")
                .agg(F.concat_ws("", F.array_sort(
@@ -159,9 +183,9 @@ def test_bucket_cols_survive_lifecycle(rig, tmp_path):
     snap = dt.current()
     assert snap.bucket_cols == ["repo", "path"] and snap.n_buckets == 16
     with pytest.raises(ValueError, match="bucket counts differ"):
-        colocated_join(t, dt, on=["repo", "path"])
+        colocated_join_many([t, dt], on=["repo", "path"])
     dt.rebucket(8, salt_factor=1)  # back to the source's count
-    j = colocated_join(t, dt, on=["repo", "path"])
+    j = colocated_join_many([t, dt], on=["repo", "path"])
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan
     # rollback and clone carry the layout too
@@ -182,13 +206,13 @@ def test_engine_group_colocated_join(spark, rig, tmp_path):
         "chunks": EngineConfig(table_path=str(tmp_path / "chunks"),
                                merge_mode="mor"),
     })
-    j = group.colocated_join("repos", "chunks", on=["repo", "path"])
+    j = group.colocated_join_many(["repos", "chunks"], on=["repo", "path"])
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan
     assert j.count() == t.read().join(
         d.read().withColumnRenamed("lsn", "x"), ["repo", "path"]).count()
     with pytest.raises(KeyError, match="unknown table"):
-        group.colocated_join("repos", "nope")
+        group.colocated_join_many(["repos", "nope"])
 
 
 STATS_SQL = """
@@ -204,9 +228,6 @@ def test_colocated_join_many_three_tables(spark, rig, tmp_path):
     zero shuffle exchanges — and equals the naive shuffled 3-way join
     that the same query over EngineGroup.sql views would produce."""
     from data_migration_service_spark.api import EngineGroup
-    from data_migration_service_spark.tables.colocated import (
-        colocated_join_many,
-    )
 
     t, d, cfg = rig
     s = DerivedTable.create(spark, str(tmp_path / "stats"), t, STATS_SQL)
@@ -270,7 +291,8 @@ def test_hot_bucket_pair_parallelizes_by_file_splits(spark, tmp_path):
     snap = t.current()
     hot = max(range(4), key=lambda b: t.bucket_bytes_estimate(snap, b))
 
-    j = colocated_join(t, d.table, on=["repo", "path"], buckets=[hot])
+    j = colocated_join_many([t, d.table], on=["repo", "path"],
+                            buckets=[hot])
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan, plan[:4000]
     # parallelism inside the single hot bucket-pair: several file splits
@@ -282,7 +304,7 @@ def test_hot_bucket_pair_parallelizes_by_file_splits(spark, tmp_path):
 
     from data_migration_service_spark.tables.lake import bucket_expr
     naive = (t.read().join(
-        d.read().withColumnRenamed("lsn", "lsn_r"), ["repo", "path"])
+        d.read().withColumnRenamed("lsn", "lsn_r1"), ["repo", "path"])
         .where(bucket_expr(["repo", "path"], 4) == hot))
     cols = sorted(naive.columns)
     a, b = j.select(*cols), naive.select(*cols)
@@ -313,7 +335,8 @@ def test_optimize_preserves_hot_bucket_file_splits(spark, tmp_path):
 
     snap = t.current()
     hot = max(range(4), key=lambda b: t.bucket_bytes_estimate(snap, b))
-    before = colocated_join(t, d.table, on=["repo", "path"], buckets=[hot])
+    before = colocated_join_many([t, d.table], on=["repo", "path"],
+                                 buckets=[hot])
     before_rows = before.count()
 
     # OPTIMIZE both sides under the current layout rules — the writer
@@ -322,7 +345,8 @@ def test_optimize_preserves_hot_bucket_file_splits(spark, tmp_path):
     rewrite_buckets(d.table, EngineConfig(table_path=str(tmp_path / "chunks"),
                                           merge_mode="mor"))
 
-    j = colocated_join(t, d.table, on=["repo", "path"], buckets=[hot])
+    j = colocated_join_many([t, d.table], on=["repo", "path"],
+                            buckets=[hot])
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan, plan[:4000]
     left_files = [f for f in j.inputFiles() if "/repos/" in f]

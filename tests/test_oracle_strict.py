@@ -19,7 +19,11 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
-from tools.check_oracle import TABLES, strict_compare  # noqa: E402
+from tools.check_oracle import (  # noqa: E402
+    TABLES,
+    parse_args,
+    strict_compare,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -62,3 +66,21 @@ def test_strict_oracle(spark, duck, name):
     assert len(s_pdf) > 0, f"{name}: empty result at sf0.001"
     issues = strict_compare(s_pdf, o_pdf)
     assert not issues, f"{name}: {issues}"
+
+
+@pytest.mark.parametrize("argv", [["--json"], ["--json", "--strict"],
+                                  ["sf", "q", "--json"]])
+def test_check_oracle_json_without_path_exits_with_usage(argv, capsys):
+    """`--json` must be followed by an output path: a trailing one (or
+    one followed by another flag) exits 2 with the usage line instead of
+    raising IndexError or swallowing `--strict` as the path."""
+    with pytest.raises(SystemExit) as e:
+        parse_args(argv)
+    assert e.value.code == 2
+    assert "usage:" in capsys.readouterr().err
+
+
+def test_check_oracle_args_intermixed():
+    ns = parse_args(["--strict", "sf", "q1", "--json", "out.json", "q2"])
+    assert ns.strict and ns.json_out == "out.json"
+    assert ns.args == ["sf", "q1", "q2"]

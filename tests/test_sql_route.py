@@ -6,6 +6,9 @@ shuffled plan returns; queries outside the routable envelope fall back
 to the naive plan, and `aligned="require"` surfaces the refusal reason
 instead of shipping a shuffled plan silently."""
 
+import threading
+from collections import Counter
+
 import pytest
 from pyspark.sql.utils import AnalysisException
 
@@ -30,12 +33,25 @@ def group(spark, tmp_path_factory):
     d = DerivedTable.create(spark, str(tmp_path / "chunks"), t, CHUNK_SQL)
     d.sync(t)
     d.compact()
+    # one row per live doc (empty docs too, which chunks lacks), with a
+    # column that differs from the source's `lang` only in case
+    g = DerivedTable.create(spark, str(tmp_path / "langs"), t, LANG_SQL)
+    g.sync(t)
+    g.compact()
     return EngineGroup(spark, {
         "repos": cfg,
         "chunks": EngineConfig(table_path=str(tmp_path / "chunks"),
                                merge_mode="mor"),
+        "langs": EngineConfig(table_path=str(tmp_path / "langs"),
+                              merge_mode="mor"),
     })
 
+
+LANG_SQL = """
+SELECT repo, path, lsn, CAST(0 AS BIGINT) AS seq,
+       concat(upper(coalesce(lang, '')), '!') AS Lang
+FROM __source__
+"""
 
 JOIN_SQL = ("SELECT a.repo, a.path, a.content, b.chunk_text "
             "FROM repos a JOIN chunks b "
@@ -222,3 +238,82 @@ def test_parenthesized_on_condition_routes(group, no_auto_broadcast):
     routed = group.sql(q, aligned="require")
     assert "Exchange hashpartitioning" not in _plan(routed)
     _same_rows(routed, group.sql(q, aligned="off"))
+
+
+def test_left_chain_middle_key_refuses(group, no_auto_broadcast):
+    """`a LEFT JOIN b ... LEFT JOIN c ON b.k = c.k` matches c only where
+    b matched, but the routed plan joins c on the merged key: routing
+    must refuse (auto falls back to the naive answer), while the
+    `ON a.k = c.k` form routes and matches."""
+    q = ("SELECT a.repo, a.path, b.chunk_text, c.lsn AS doc_lsn "
+         "FROM repos a LEFT JOIN chunks b "
+         "ON a.repo = b.repo AND a.path = b.path "
+         "LEFT JOIN langs c ON {x}.repo = c.repo AND {x}.path = c.path")
+    middle, first = q.format(x="b"), q.format(x="a")
+    naive = group.sql(middle, aligned="off")
+    # the distinguishing row: missing from chunks, present in langs
+    assert group.sql(first, aligned="off").where(
+        "chunk_text IS NULL AND doc_lsn IS NOT NULL").count() > 0
+    _same_rows(group.sql(middle), naive)
+    with pytest.raises(ValueError, match="does not pair the first table"):
+        group.sql(middle, aligned="require")
+    routed = group.sql(first, aligned="require")
+    assert "Exchange hashpartitioning" not in _plan(routed)
+    _same_rows(routed, group.sql(first, aligned="off"))
+
+
+def test_case_variant_collision_routes(group):
+    """`lang` (repos) and `Lang` (langs) collide under Spark's
+    case-insensitive resolution; the routed join must rename one of them
+    exactly as the router maps references, never raise AnalysisException."""
+    q = ("SELECT a.repo, a.path, a.lang AS src_lang, b.Lang AS up_lang "
+         "FROM repos a JOIN langs b ON a.repo = b.repo AND a.path = b.path")
+    _same_rows(group.sql(q, aligned="require"), group.sql(q, aligned="off"))
+
+
+def test_concurrent_routing_uses_private_views(spark, group, monkeypatch):
+    """Two threads routing different queries on one session must not
+    replace or drop each other's joined source view."""
+    queries = [JOIN_SQL,
+               "SELECT a.repo, a.path, b.lsn AS doc_lsn FROM repos a "
+               "LEFT JOIN langs b ON a.repo = b.repo AND a.path = b.path"]
+    want = [Counter(map(tuple, group.sql(q, aligned="off").collect()))
+            for q in queries]
+    errors: list[Exception] = []
+    start = threading.Barrier(2)
+
+    def worker(i: int) -> None:
+        try:
+            start.wait(timeout=60)
+            # plan back to back so the two threads' view windows overlap
+            dfs = [group.sql(queries[i], aligned="require")
+                   for _ in range(6)]
+            for df in dfs:
+                assert Counter(map(tuple, df.collect())) == want[i]
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in (0, 1)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=600)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    assert not [t.name for t in spark.catalog.listTables()
+                if t.name.startswith("__dms_aligned_src")]
+
+    # deterministic interleaving: a whole second routed query runs while
+    # the first one's view is registered but not yet resolved
+    real_sql, inner = spark.sql, []
+
+    def interleaved_sql(q, *a, **kw):
+        if "__dms_aligned_src" in q and not inner:
+            inner.append(None)  # the nested call passes straight through
+            inner[0] = group.sql(queries[1], aligned="require").collect()
+        return real_sql(q, *a, **kw)
+
+    monkeypatch.setattr(spark, "sql", interleaved_sql)
+    got = group.sql(queries[0], aligned="require").collect()
+    assert Counter(map(tuple, got)) == want[0]
+    assert Counter(map(tuple, inner[0])) == want[1]

@@ -1,14 +1,11 @@
 """Pure-parser tests for the aligned-SQL router (tables/sql_route.py) —
 no Spark session: the grammar's accept/reject envelope and the collision
-rename simulation must be cheap to pin exhaustively."""
+rename rule must be cheap to pin exhaustively."""
 
 import pytest
 
-from data_migration_service_spark.tables.sql_route import (
-    Unroutable,
-    _simulate_renames,
-    parse,
-)
+from data_migration_service_spark.tables.colocated import collision_renames
+from data_migration_service_spark.tables.sql_route import Unroutable, parse
 
 
 def test_accepts_basic_join_chain():
@@ -68,13 +65,11 @@ def test_string_literals_survive_tokenizing():
     assert "'join .dot ''q'''" in texts
 
 
-def test_simulate_renames_mirrors_join_many():
+def test_collision_renames_positional_suffix():
     # t0(k, x, lsn), t1(k, x, lsn, y), t2(k, lsn): collisions rename to
     # _rK positionally; join col never renames
-    ren = _simulate_renames(
-        [["k", "x", "lsn"], ["k", "x", "lsn", "y"], ["k", "lsn"]],
-        on_lower={"k"},
-    )
+    ren = collision_renames(
+        [["k", "x", "lsn"], ["k", "x", "lsn", "y"], ["k", "lsn"]], ["k"])
     assert ren[(0, "lsn")] == "lsn"
     assert ren[(1, "x")] == "x_r1"
     assert ren[(1, "lsn")] == "lsn_r1"
@@ -83,13 +78,35 @@ def test_simulate_renames_mirrors_join_many():
     assert ren[(1, "k")] == "k" and ren[(2, "k")] == "k"
 
 
-def test_simulate_renames_cascaded_collision():
+def test_collision_renames_cascaded_collision():
     # a later table whose column collides with an EARLIER rename target
-    # (x_r1) must still get a unique name, exactly as join-many would
-    ren = _simulate_renames(
-        [["k", "x"], ["k", "x"], ["k", "x_r1"]], on_lower={"k"})
+    # (x_r1) must still get a unique name
+    ren = collision_renames([["k", "x"], ["k", "x"], ["k", "x_r1"]], ["k"])
     assert ren[(1, "x")] == "x_r1"
     assert ren[(2, "x_r1")] == "x_r1_r2"
+
+
+def test_collision_renames_case_insensitive():
+    # Spark resolves names case-insensitively: `lang` and `Lang` collide,
+    # and a key spelled in another case is still the key
+    ren = collision_renames([["K", "lang"], ["k", "Lang"]], ["k"])
+    assert ren[(1, "lang")] == "Lang_r1"
+    assert ren[(1, "k")] == "k"
+
+
+def test_left_chain_on_must_pair_first_table():
+    with pytest.raises(Unroutable, match="does not pair the first table"):
+        parse("SELECT a.x FROM t1 a LEFT JOIN t2 b ON a.k = b.k "
+              "LEFT JOIN t3 c ON b.k = c.k")
+    with pytest.raises(Unroutable, match="does not pair the first table"):
+        parse("SELECT a.x FROM t1 a LEFT JOIN t2 b ON a.k = b.k "
+              "LEFT JOIN t3 c ON a.k = c.k AND a.k = b.k")
+    p = parse("SELECT a.x FROM t1 a LEFT JOIN t2 b ON a.k = b.k "
+              "LEFT JOIN t3 c ON c.k = a.k")
+    assert p.how == "left" and p.on_cols == ["k"]
+    # inner chains may key any earlier table: equal keys are transitive
+    assert parse("SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.k "
+                 "JOIN t3 c ON b.k = c.k").on_cols == ["k"]
 
 
 def test_left_join_and_using_parse():

@@ -4,7 +4,7 @@ Runs every `queries()[name]` on Spark and its `oracle_sql()[name]` on DuckDB
 over the same sf dir, compares row count, column names, and an
 order-insensitive multiset of normalized rows. Usage:
 
-    python tools/check_oracle.py [--strict] [sf_dir] [query ...]
+    python tools/check_oracle.py [--strict] [--json PATH] [sf_dir] [query ...]
 
 Default mode normalizes floats to 6 significant figures (round-3 lesson:
 that hid 4 driver hash mismatches). `--strict` reproduces the driver's
@@ -19,6 +19,7 @@ mismatch), and (b) float-sum ULP drift landing on a rounding boundary
 
 from __future__ import annotations
 
+import argparse
 import math
 import os
 import sys
@@ -119,15 +120,20 @@ def strict_compare(s_pdf, o_pdf):
     return issues
 
 
+def parse_args(argv):
+    """Parse the command line; a `--json` without a path (trailing, or
+    followed by another flag) exits 2 with the usage message."""
+    ap = argparse.ArgumentParser(
+        usage="%(prog)s [--strict] [--json PATH] [sf_dir] [query ...]")
+    ap.add_argument("--strict", action="store_true")
+    ap.add_argument("--json", metavar="PATH", dest="json_out")
+    ap.add_argument("args", nargs="*")
+    return ap.parse_intermixed_args(argv)
+
+
 def main():
-    argv = sys.argv[1:]
-    strict = "--strict" in argv
-    json_out = None
-    if "--json" in argv:
-        i = argv.index("--json")
-        json_out = argv[i + 1]
-        del argv[i:i + 2]
-    argv = [a for a in argv if a != "--strict"]
+    ns = parse_args(sys.argv[1:])
+    strict, json_out, argv = ns.strict, ns.json_out, ns.args
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
     results: dict[str, dict] = {}
