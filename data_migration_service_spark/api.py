@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import logging
 import os
+import threading
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,11 +40,13 @@ from data_migration_service_spark.functions.hashing import row_sha256
 from data_migration_service_spark.operators import verify as V
 from data_migration_service_spark.operators.merge import (
     compact,
+    compact_ripe,
     current_epoch,
     delete_where,
     maybe_broadcast_keys,
     probe_key_hashes,
     probe_keys,
+    stage_audit_publish,
 )
 from data_migration_service_spark.operators.patch import apply_changes
 from data_migration_service_spark.registry import SchemaRegistry
@@ -55,6 +58,12 @@ from data_migration_service_spark.tables.lake import (
 )
 
 logger = logging.getLogger(__name__)
+
+# Temp views live in the session catalog, shared by every thread on one
+# SparkSession: callers that register views under fixed names hold this
+# lock from registration through `spark.sql` (which analyses eagerly, so
+# the returned DataFrame no longer needs the views) to the drop.
+_VIEW_LOCK = threading.Lock()
 
 
 class JobLock:
@@ -163,51 +172,34 @@ class Engine:
         pass `expected` to require per-row sha256(content) equality.
 
         Iceberg analogue: WAP / branch commit + audit + fast-forward; here
-        the staged manifest IS the branch."""
+        the staged manifest IS the branch. The protocol (orphan recovery,
+        stage, gate, publish + compaction or discard) is
+        operators/merge.stage_audit_publish."""
         if gate is None and expected is None:
             raise ValueError("apply_audited needs a gate callable or an "
                              "expected DataFrame")
-        # Orphan recovery: a committer that died between stage and
-        # publish/discard leaves a staged manifest holding the next
-        # snapshot id. Under the engine's single-writer-per-table rule
-        # (JobLock / streaming checkpoint), any staged id found at apply
-        # time is such an orphan — unpublished by definition, so discarding
-        # it cannot lose committed data. A concurrent auditor (single-writer
-        # violation) fails loudly at its publish(), never silently.
-        if self.table.staged_snapshots():
-            self.table.discard_staged()
-        stats = apply_changes(self.table, batch, self.cfg, epoch=epoch,
-                              publish=False)
+        audit: dict[str, Any] = {"gate": "callable"}
+        if gate is None:
+            audit["gate"] = "verify_state"
+
+            def gate(staged_df: DataFrame) -> bool:
+                res = V.verify_state(
+                    expected, staged_df, list(self.cfg.key_cols),
+                    content_col=content_col,
+                    report_cap=self.cfg.mismatch_report_cap)
+                audit.update(n_mismatch=res.n_mismatch,
+                             n_missing_in_target=res.n_missing_in_target,
+                             n_missing_in_source=res.n_missing_in_source)
+                return res.consistent
+
+        stats, ok = stage_audit_publish(self.table, batch, self.cfg, epoch,
+                                        gate)
         if stats.skipped:
             return {"epoch": epoch, "published": False, "skipped": True,
                     "snapshot_id": stats.snapshot_id}
-        staged = self.table.load_snapshot(stats.snapshot_id)
-        staged_df = self.table.read(snapshot=staged)
-        if gate is not None:
-            ok = bool(gate(staged_df))
-            audit: dict[str, Any] = {"gate": "callable", "passed": ok}
-        else:
-            res = V.verify_state(
-                expected, staged_df, list(self.cfg.key_cols),
-                content_col=content_col,
-                report_cap=self.cfg.mismatch_report_cap)
-            ok = res.consistent
-            audit = {"gate": "verify_state", "passed": ok,
-                     "n_mismatch": res.n_mismatch,
-                     "n_missing_in_target": res.n_missing_in_target,
-                     "n_missing_in_source": res.n_missing_in_source}
-        if ok:
-            self.table.publish(staged.snapshot_id)
-            # deferred auto-compaction, now on the published snapshot
-            ripe = [b for b, ds in self.table.current().deltas.items()
-                    if len(ds) >= self.cfg.compact_threshold]
-            if ripe:
-                compact(self.table, self.cfg, buckets=ripe)
-        else:
-            self.table.discard_staged(staged.snapshot_id)
+        audit["passed"] = ok
         return {"epoch": epoch, "published": ok, "skipped": False,
-                "snapshot_id": (self.table.current().snapshot_id if ok
-                                else None),
+                "snapshot_id": stats.snapshot_id if ok else None,
                 "audit": audit}
 
     # ---- initial full load (snapshot-then-tail handoff) ----
@@ -561,11 +553,12 @@ class Engine:
         df = (self.read_as_of(epoch=epoch, timestamp=timestamp)
               if epoch is not None or timestamp is not None
               else self.table.read())
-        df.createOrReplaceTempView(name)
-        try:
-            return self.spark.sql(query)
-        finally:
-            self.spark.catalog.dropTempView(name)
+        with _VIEW_LOCK:
+            df.createOrReplaceTempView(name)
+            try:
+                return self.spark.sql(query)
+            finally:
+                self.spark.catalog.dropTempView(name)
 
     # ---- incremental verification ----
     def verify_incremental(self, expected: DataFrame, since_snapshot: int,
@@ -1192,15 +1185,17 @@ class EngineGroup:
                         f"routable: {e.args[0]}") from e
                 logger.debug("aligned-join routing fell back to the "
                              "naive plan: %s", e.args[0])
-        try:
-            for name, eng in self.engines.items():
-                snap = (eng.table.load_snapshot(pins[name])
-                        if name in pins else None)
-                eng.table.read(snapshot=snap).createOrReplaceTempView(name)
-            return self.spark.sql(query)
-        finally:
-            for name in self.engines:
-                self.spark.catalog.dropTempView(name)
+        with _VIEW_LOCK:
+            try:
+                for name, eng in self.engines.items():
+                    snap = (eng.table.load_snapshot(pins[name])
+                            if name in pins else None)
+                    eng.table.read(snapshot=snap).createOrReplaceTempView(
+                        name)
+                return self.spark.sql(query)
+            finally:
+                for name in self.engines:
+                    self.spark.catalog.dropTempView(name)
 
     def colocated_join_many(self, names: list[str], **kw) -> DataFrame:
         """Bucket-aligned join across N co-located group tables in one
@@ -1251,6 +1246,8 @@ class EngineGroup:
                 t.discard_staged(sid)
             raise
         txn = group_commit(catalog_root, staged) if staged else None
+        for name in staged:  # deferred auto-compaction, post-publish
+            compact_ripe(self.engines[name].table, self.engines[name].cfg)
         return {"txn": txn, "skipped": skipped,
                 "published": {n: sid for n, (_, sid) in staged.items()}}
 

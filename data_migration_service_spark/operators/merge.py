@@ -13,6 +13,18 @@ ordering contract (PK-ordered paging). Semantics per the north rule:
   batch epoch; a replayed epoch is detected from the current snapshot's
   props and skipped (foreachBatch is at-least-once by default).
 
+The exactly-once epoch protocol lives here once, and every writer
+(`cdc_apply` cow and mor, `patch.patch_apply`, `merge_into.merge_into`)
+runs it instead of keeping a copy:
+
+    replayed ── skip an epoch at or below the writer's committed epoch
+    write    ── writer-specific (batch_lineage / side_stats help)
+    commit_epoch ── ONE snapshot: epoch prop, 4-key summary, optimistic
+                    parent, optional staging; fills MergeStats
+    stage_audit_publish ── optional: stage, gate the staged state,
+                           publish or discard
+    compact_ripe ── after publish: fold buckets at compact_threshold
+
 Two write strategies (cfg.merge_mode), same semantics:
 
 **cow** (copy-on-write) — one shuffle, bucket-pruned rewrite:
@@ -154,6 +166,148 @@ def current_epoch(table: SnapshotTable, cfg: EngineConfig | None = None) -> int:
     return int(table.current().props.get(epoch_key(cfg), "-1"))
 
 
+# ---------- the epoch protocol (see module doc) ----------
+
+def replayed(snap, cfg: EngineConfig | None,
+             epoch: int | None) -> MergeStats | None:
+    """The replay guard: a skipped MergeStats when `epoch` is at or below
+    the writer's committed epoch on `snap` (failure re-run of a committed
+    batch), else None. Race-free because this check and the writer's
+    commit happen in the same single-writer-per-writer_id sequence (a
+    racing duplicate of the same epoch is caught by the rebase's epoch
+    conflict check at commit time)."""
+    if epoch is not None and epoch <= int(
+            snap.props.get(epoch_key(cfg), "-1")):
+        return MergeStats(epoch=epoch, skipped=True,
+                          snapshot_id=snap.snapshot_id)
+    return None
+
+
+def batch_lineage(src: DataFrame, lsn_col: str) -> dict[int, dict]:
+    """Per-bucket lineage of a batch carrying BUCKET_COL — rows and LSN
+    range per partition (north_rule: per-partition lineage records). One
+    tiny driver-side collect of <= n_buckets rows; its keys are the
+    affected-bucket set."""
+    rows = (
+        src.groupBy(BUCKET_COL)
+        .agg(F.count(F.lit(1)).alias("n"),
+             F.min(lsn_col).alias("lo"),
+             F.max(lsn_col).alias("hi"))
+        .collect()
+    )
+    return {int(r[BUCKET_COL]): {"rows": int(r["n"]), "lsn_min": int(r["lo"]),
+                                 "lsn_max": int(r["hi"])}
+            for r in rows}
+
+
+def side_stats(merged: DataFrame, stats: MergeStats) -> None:
+    """Fill matched / inserted / deleted from a merge-vs-target aggregate
+    carrying `_has_src` / `_has_tgt_min` (max / min of SIDE_COL per key):
+    a batch key the target had is matched, any other batch key inserted.
+    Deletes count batch-side tombstones only (carried-forward target
+    tombstones are history, not this epoch's deletes) — keeps cow, patch
+    and mor stats comparable."""
+    src = F.col("_has_src") == 1
+    had = F.col("_has_tgt_min") == 0
+    agg = merged.agg(
+        F.sum((src & had).cast("long")).alias("matched"),
+        F.sum((src & ~had).cast("long")).alias("inserted"),
+        F.sum((F.col(DELETED_COL) & src).cast("long")).alias("deleted"),
+    ).collect()[0]
+    stats.rows_matched = int(agg["matched"] or 0)
+    stats.rows_inserted = int(agg["inserted"] or 0)
+    stats.rows_deleted = int(agg["deleted"] or 0)
+
+
+def commit_epoch(table: SnapshotTable, snap, cfg: EngineConfig,
+                 stats: MergeStats, op: str, dirname: str | None = None,
+                 buckets=(), *, lineage: dict[int, dict] | None = None,
+                 delta: bool = False, publish: bool = True,
+                 **summary) -> MergeStats:
+    """The commit tail every writer shares: ONE snapshot on top of `snap`
+    that points `buckets` at `dirname` (a rewrite, or a delta append when
+    `delta`), tags the writer's epoch prop, carries the affected-bucket and
+    matched / inserted / deleted summary (plus any writer-specific
+    `summary` entries), and retries through the optimistic rebase. No
+    buckets = the empty-batch commit: the epoch tag alone. `publish=False`
+    stages it (write-audit-publish). Fills `stats` — snapshot id, affected
+    buckets, `rows_after_dedup` (batch keys: matched + inserted), and the
+    per-bucket `lineage` with `rows_in_batch` — and returns it."""
+    refs = {b: dirname for b in buckets}
+    new = table.commit(
+        op, {} if delta else refs,
+        delta_append=refs if delta else None,
+        props_update=({epoch_key(cfg): str(stats.epoch)}
+                      if stats.epoch is not None else {}),
+        summary={"affected_buckets": len(refs),
+                 "rows_matched": stats.rows_matched,
+                 "rows_inserted": stats.rows_inserted,
+                 "rows_deleted": stats.rows_deleted, **summary},
+        expected_parent=snap.snapshot_id,
+        publish=publish,
+        max_retries=cfg.commit_retries,
+    )
+    stats.affected_buckets = len(refs)
+    stats.snapshot_id = new.snapshot_id
+    stats.rows_after_dedup = stats.rows_matched + stats.rows_inserted
+    if lineage is not None:
+        stats.extra["bucket_lineage"] = lineage
+        stats.rows_in_batch = sum(v["rows"] for v in lineage.values())
+    return stats
+
+
+def compact_ripe(table: SnapshotTable, cfg: EngineConfig,
+                 stats: MergeStats | None = None) -> None:
+    """Post-publish compaction: fold every bucket of HEAD whose delta
+    depth reached `cfg.compact_threshold`, and point `stats` at the new
+    HEAD. Only ever on PUBLISHED state — compaction is a second commit
+    and must not build on an unpublished snapshot — so staged writers
+    run it after their publish (stage_audit_publish,
+    EngineGroup.apply_all_atomic); copy-on-write tables carry no deltas
+    and never compact."""
+    ripe = [b for b, ds in table.current().deltas.items()
+            if len(ds) >= cfg.compact_threshold]
+    if ripe:
+        compact(table, cfg, buckets=ripe)
+        if stats is not None:
+            stats.extra["compacted_buckets"] = len(ripe)
+            stats.snapshot_id = table.current().snapshot_id
+
+
+def stage_audit_publish(table: SnapshotTable, batch: DataFrame,
+                        cfg: EngineConfig, epoch: int,
+                        gate) -> tuple[MergeStats, bool]:
+    """Write-audit-publish of one epoch: stage the writer's commit (HEAD
+    unchanged, readers keep the pre-batch state), run `gate(staged_df) ->
+    bool` on the staged snapshot's full state, then publish and compact
+    ripe buckets, or discard the staged manifest and its data files.
+    Returns (stats, published); a replayed epoch returns its skipped stats
+    unpublished. The epoch guard keys off PUBLISHED state, so a rejected
+    epoch re-applies under the same number.
+
+    Orphan recovery first: a committer that died between stage and
+    publish/discard leaves a staged manifest holding the next snapshot
+    id. Under the single-writer-per-table rule (JobLock / streaming
+    checkpoint) any staged id found here is such an orphan — unpublished
+    by definition, so discarding it cannot lose committed data. A
+    concurrent auditor (single-writer violation) fails loudly at its
+    publish(), never silently."""
+    from data_migration_service_spark.operators.patch import apply_changes
+
+    if table.staged_snapshots():
+        table.discard_staged()
+    stats = apply_changes(table, batch, cfg, epoch=epoch, publish=False)
+    if stats.skipped:
+        return stats, False
+    staged = table.load_snapshot(stats.snapshot_id)
+    if not gate(table.read(snapshot=staged)):
+        table.discard_staged(staged.snapshot_id)
+        return stats, False
+    table.publish(staged.snapshot_id)
+    compact_ripe(table, cfg, stats)
+    return stats, True
+
+
 def cdc_apply(
     table: SnapshotTable,
     batch: DataFrame,
@@ -171,15 +325,9 @@ def cdc_apply(
     staged mode — it would be a second commit on top of an unpublished
     HEAD; run it after publishing."""
     snap = table.current()
-    ekey = epoch_key(cfg)
-    if epoch is not None and epoch <= int(snap.props.get(ekey, "-1")):
-        # Replayed epoch (failure re-run): the snapshot for it already
-        # committed — idempotent skip. Race-free because this check and the
-        # commit below happen in the same single-writer-per-writer_id
-        # sequence (a racing duplicate of the same epoch is caught by the
-        # rebase's epoch conflict check at commit time).
-        return MergeStats(epoch=epoch, skipped=True,
-                          snapshot_id=snap.snapshot_id)
+    skip = replayed(snap, cfg, epoch)
+    if skip is not None:
+        return skip
 
     keys = list(cfg.key_cols)
     schema = snap.schema()
@@ -206,28 +354,13 @@ def cdc_apply(
         return _apply_mor(table, src, snap, cfg, epoch, data_fields,
                           collect_stats, publish)
 
-    # 2. plan the affected-bucket set (tiny driver-side collect, <= n_buckets
-    # rows) — the same pass yields per-bucket lineage: rows and LSN range per
-    # partition of this batch (north_rule: per-partition lineage records)
-    bucket_rows = (
-        src.groupBy(BUCKET_COL)
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.min(cfg.lsn_col).alias("lo"),
-             F.max(cfg.lsn_col).alias("hi"))
-        .collect()
-    )
-    affected = [int(r[BUCKET_COL]) for r in bucket_rows]
-    lineage = {
-        int(r[BUCKET_COL]): {"rows": int(r["n"]), "lsn_min": int(r["lo"]),
-                             "lsn_max": int(r["hi"])}
-        for r in bucket_rows
-    }
+    # 2. plan the affected-bucket set from the per-bucket lineage pass
+    lineage = batch_lineage(src, cfg.lsn_col)
+    affected = sorted(lineage)
+    stats = MergeStats(epoch=epoch)
     if not affected:
-        new = table.commit("merge", {}, props_update=(
-            {ekey: str(epoch)} if epoch is not None else {}),
-            summary={"rows": 0}, expected_parent=snap.snapshot_id,
-            publish=publish, max_retries=cfg.commit_retries)
-        return MergeStats(epoch=epoch, snapshot_id=new.snapshot_id)
+        return commit_epoch(table, snap, cfg, stats, "merge",
+                            publish=publish)
 
     # 3. read ONLY those buckets from the target (tombstones included: their
     # lsn is the anti-resurrection watermark)
@@ -242,30 +375,12 @@ def cdc_apply(
     # (bucket, salt) for the writer.
     unioned = tgt.unionByName(src)
     order = F.struct(F.col(cfg.lsn_col), F.col(SIDE_COL))
-    merged = (
-        lww_fused(unioned, keys, order, max(cfg.salt_factor, 1),
-                  struct_cols=data_cols + [DELETED_COL])
-        .withColumn("_matched",
-                    (F.col("_has_src") == 1) & (F.col("_has_tgt_min") == 0))
-        .drop("_has_tgt_min")
-    )
-
-    stats = MergeStats(epoch=epoch)
+    merged = lww_fused(unioned, keys, order, max(cfg.salt_factor, 1),
+                       struct_cols=data_cols + [DELETED_COL])
     if collect_stats:
-        agg = merged.agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.col("_matched").cast("long")).alias("matched"),
-            F.sum(((F.col("_has_src") == 1) & ~F.col("_matched")).cast("long")).alias("inserted"),
-            # batch-side tombstones only (carried-forward target tombstones
-            # are history, not this epoch's deletes) — keeps cow and mor
-            # stats comparable
-            F.sum((F.col(DELETED_COL) & (F.col("_has_src") == 1)).cast("long")).alias("deleted"),
-        ).collect()[0]
-        stats.rows_matched = int(agg["matched"] or 0)
-        stats.rows_inserted = int(agg["inserted"] or 0)
-        stats.rows_deleted = int(agg["deleted"] or 0)
+        side_stats(merged, stats)
 
-    out = merged.drop("_matched", "_has_src")
+    out = merged.drop("_has_src", "_has_tgt_min")
     # 5. write the rewritten buckets (salted parallel write for hot buckets)
     out_schema = T.StructType(
         data_fields + [T.StructField(DELETED_COL, T.BooleanType(), False)]
@@ -273,25 +388,8 @@ def cdc_apply(
     dirname = table.write_buckets(
         out, affected, write_schema=out_schema, pre_partitioned=True
     )
-    new = table.commit(
-        "merge",
-        {b: dirname for b in affected},
-        props_update=({ekey: str(epoch)} if epoch is not None else {}),
-        summary={
-            "affected_buckets": len(affected),
-            "rows_matched": stats.rows_matched,
-            "rows_inserted": stats.rows_inserted,
-            "rows_deleted": stats.rows_deleted,
-        },
-        expected_parent=snap.snapshot_id,
-        publish=publish,
-        max_retries=cfg.commit_retries,
-    )
-    stats.affected_buckets = len(affected)
-    stats.snapshot_id = new.snapshot_id
-    stats.extra["bucket_lineage"] = lineage
-    stats.rows_in_batch = sum(v["rows"] for v in lineage.values())
-    return stats
+    return commit_epoch(table, snap, cfg, stats, "merge", dirname, affected,
+                        lineage=lineage, publish=publish)
 
 
 def _apply_mor(table, src, snap, cfg, epoch, data_fields,
@@ -306,7 +404,6 @@ def _apply_mor(table, src, snap, cfg, epoch, data_fields,
     import uuid as _uuid
 
     keys = list(cfg.key_cols)
-    ekey = epoch_key(cfg)
     data_cols = [f.name for f in data_fields]
 
     salt = cfg.salt_factor
@@ -351,15 +448,8 @@ def _apply_mor(table, src, snap, cfg, epoch, data_fields,
                            snap.n_buckets)
 
     stats = MergeStats(epoch=epoch)
-    if not affected:
-        new = table.commit("merge-mor", {}, props_update=(
-            {ekey: str(epoch)} if epoch is not None else {}),
-            summary={"rows": 0}, expected_parent=snap.snapshot_id,
-            publish=publish, max_retries=cfg.commit_retries)
-        stats.snapshot_id = new.snapshot_id
-        return stats
-
-    if collect_stats:
+    stats.extra["salt_factor"] = salt
+    if collect_stats and affected:
         # column-pruned key probe of the affected buckets (NOT a rewrite):
         # how many batch keys already exist in the target. Tombstoned keys
         # count as existing — the cow aggregate's _matched sees them too
@@ -385,37 +475,11 @@ def _apply_mor(table, src, snap, cfg, epoch, data_fields,
         stats.rows_matched = int(m["matched"] or 0)
         stats.rows_deleted = int(agg["deleted"] or 0)
         stats.rows_inserted = total - stats.rows_matched
-        stats.rows_after_dedup = total
 
-    new = table.commit(
-        "merge-mor", {},
-        delta_append={b: dirname for b in affected},
-        props_update=({ekey: str(epoch)} if epoch is not None else {}),
-        summary={
-            "affected_buckets": len(affected),
-            "rows_matched": stats.rows_matched,
-            "rows_inserted": stats.rows_inserted,
-            "rows_deleted": stats.rows_deleted,
-        },
-        expected_parent=snap.snapshot_id,
-        publish=publish,
-        max_retries=cfg.commit_retries,
-    )
-    stats.affected_buckets = len(affected)
-    stats.snapshot_id = new.snapshot_id
-    stats.extra["bucket_lineage"] = lineage
-    stats.extra["salt_factor"] = salt
-    stats.rows_in_batch = sum(v["rows"] for v in lineage.values())
-
-    ripe = [b for b in affected
-            if len(new.deltas.get(b, [])) >= cfg.compact_threshold]
-    if ripe and publish:
-        # staged mode defers this: compaction is a second commit and must
-        # build on the PUBLISHED snapshot (Engine.apply_audited runs it
-        # after the audit passes)
-        compact(table, cfg, buckets=ripe)
-        stats.extra["compacted_buckets"] = len(ripe)
-        stats.snapshot_id = table.current().snapshot_id
+    commit_epoch(table, snap, cfg, stats, "merge-mor", dirname, affected,
+                 lineage=lineage, delta=True, publish=publish)
+    if publish:  # staged mode defers compaction to after its publish
+        compact_ripe(table, cfg, stats)
     return stats
 
 
@@ -529,6 +593,39 @@ def compact(table: SnapshotTable, cfg: EngineConfig,
     owns the safety of the watermark."""
     snap = table.current()
     todo = sorted(b for b in (buckets or snap.deltas) if snap.deltas.get(b))
+    return _rewrite(table, cfg, snap, todo, "compact", tombstone_watermark)
+
+
+def rewrite_buckets(table: SnapshotTable, cfg: EngineConfig,
+                    buckets: list[int] | None = None,
+                    tombstone_watermark: int | None = None) -> int:
+    """OPTIMIZE parity (Delta `OPTIMIZE [ZORDER BY]` / Iceberg
+    rewrite_data_files): rewrite the base files of `buckets` (default:
+    every populated bucket) under the table's CURRENT layout rules —
+    `write_sort` clustering (`cols:` / `zorder:`), `target_file_rows`,
+    key sort — folding any delta dirs along the way.
+
+    `compact` only touches buckets carrying deltas; this verb exists for
+    the other reason to rewrite: the layout RULES changed (a `set_props`
+    flipped write_sort to a Z-order, target_file_rows shrank) or L0-era
+    files were written unsorted and reads now need the clustering. Same
+    fused one-exchange plan, same optimistic-rebase commit as compaction,
+    so it runs concurrently with ingest. At 100 TB run it bucket-ranged
+    (the `buckets` arg) as a rolling background pass, not as one job."""
+    snap = table.current()
+    populated = sorted(set(snap.buckets)
+                       | {b for b, d in snap.deltas.items() if d})
+    todo = sorted(set(buckets) & set(populated)) if buckets is not None \
+        else populated
+    return _rewrite(table, cfg, snap, todo, "optimize", tombstone_watermark)
+
+
+def _rewrite(table: SnapshotTable, cfg: EngineConfig, snap, todo: list[int],
+             op: str, tombstone_watermark: int | None) -> int:
+    """The bucket rewrite behind `compact` and `rewrite_buckets`: fold
+    base + deltas of `todo` into new base dirs and commit them as `op` on
+    top of `snap`. Returns the new snapshot id (`snap`'s when `todo` is
+    empty)."""
     if not todo:
         return snap.snapshot_id
     # raw (unreduced) read + fused LWW: one exchange does both the
@@ -554,52 +651,7 @@ def compact(table: SnapshotTable, cfg: EngineConfig,
         )
     dirname = table.write_buckets(merged, todo, write_schema=schema,
                                   pre_partitioned=True)
-    new = table.commit("compact", {b: dirname for b in todo},
-                       summary={"buckets": len(todo)},
-                       expected_parent=snap.snapshot_id,
-                       max_retries=cfg.commit_retries)
-    return new.snapshot_id
-
-
-def rewrite_buckets(table: SnapshotTable, cfg: EngineConfig,
-                    buckets: list[int] | None = None,
-                    tombstone_watermark: int | None = None) -> int:
-    """OPTIMIZE parity (Delta `OPTIMIZE [ZORDER BY]` / Iceberg
-    rewrite_data_files): rewrite the base files of `buckets` (default:
-    every populated bucket) under the table's CURRENT layout rules —
-    `write_sort` clustering (`cols:` / `zorder:`), `target_file_rows`,
-    key sort — folding any delta dirs along the way.
-
-    `compact` only touches buckets carrying deltas; this verb exists for
-    the other reason to rewrite: the layout RULES changed (a `set_props`
-    flipped write_sort to a Z-order, target_file_rows shrank) or L0-era
-    files were written unsorted and reads now need the clustering. Same
-    fused one-exchange plan, same optimistic-rebase commit as compaction,
-    so it runs concurrently with ingest. At 100 TB run it bucket-ranged
-    (the `buckets` arg) as a rolling background pass, not as one job."""
-    snap = table.current()
-    populated = sorted(set(snap.buckets)
-                       | {b for b, d in snap.deltas.items() if d})
-    todo = sorted(set(buckets) & set(populated)) if buckets is not None \
-        else populated
-    if not todo:
-        return snap.snapshot_id
-    raw = table.read(snapshot=snap, buckets=todo, include_deleted=True,
-                     reduce=False, with_gen=True)
-    schema = snap.schema()
-    data_cols = [f.name for f in schema.fields
-                 if f.name not in (BUCKET_COL, DELETED_COL)]
-    merged = lww_fused(raw, list(snap.key_cols),
-                       F.struct(F.col(cfg.lsn_col), F.col(GEN_COL)),
-                       max(cfg.salt_factor, 1),
-                       struct_cols=data_cols + [DELETED_COL])
-    if tombstone_watermark is not None:
-        merged = merged.where(
-            ~(F.col(DELETED_COL) & (F.col(cfg.lsn_col) <= tombstone_watermark))
-        )
-    dirname = table.write_buckets(merged, todo, write_schema=schema,
-                                  pre_partitioned=True)
-    new = table.commit("optimize", {b: dirname for b in todo},
+    new = table.commit(op, {b: dirname for b in todo},
                        summary={"buckets": len(todo)},
                        expected_parent=snap.snapshot_id,
                        max_retries=cfg.commit_retries)
@@ -715,9 +767,9 @@ def bootstrap_load(table: SnapshotTable, snapshot_df: DataFrame,
             "bootstrap_load requires an empty table; use cdc_apply to merge "
             "into existing state"
         )
-    if epoch is not None and epoch <= int(snap.props.get("epoch", "-1")):
-        return MergeStats(epoch=epoch, skipped=True,
-                          snapshot_id=snap.snapshot_id)
+    skip = replayed(snap, None, epoch)  # the plain "epoch" prop
+    if skip is not None:
+        return skip
 
     schema = snap.schema()
     data_fields = [f for f in schema.fields

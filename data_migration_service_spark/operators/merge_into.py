@@ -44,7 +44,8 @@ from pyspark.sql import functions as F
 from data_migration_service_spark.config import EngineConfig
 from data_migration_service_spark.operators.merge import (
     MergeStats,
-    epoch_key,
+    commit_epoch,
+    replayed,
 )
 from data_migration_service_spark.tables.lake import (
     BUCKET_COL,
@@ -217,10 +218,9 @@ def merge_into(
       use it for full-snapshot syncs, not incremental corrections).
     """
     snap = table.current()
-    ekey = epoch_key(cfg)
-    if epoch is not None and epoch <= int(snap.props.get(ekey, "-1")):
-        return MergeStats(epoch=epoch, skipped=True,
-                          snapshot_id=snap.snapshot_id)
+    skip = replayed(snap, cfg, epoch)
+    if skip is not None:
+        return skip
     keys = list(cfg.key_cols)
     schema = snap.schema()
     data_fields = [f for f in schema.fields
@@ -247,12 +247,9 @@ def merge_into(
     if not_matched_by_source:
         affected = sorted(set(affected)
                           | set(snap.buckets) | set(snap.deltas or {}))
+    stats = MergeStats(epoch=epoch)
     if not affected:
-        new = table.commit("merge_into", {}, props_update=(
-            {ekey: str(epoch)} if epoch is not None else {}),
-            summary={"rows": 0}, expected_parent=snap.snapshot_id,
-            max_retries=cfg.commit_retries)
-        return MergeStats(epoch=epoch, snapshot_id=new.snapshot_id)
+        return commit_epoch(table, snap, cfg, stats, "merge_into")
 
     tgt_all = table.read(snapshot=snap, buckets=affected,
                          include_deleted=True)
@@ -278,7 +275,6 @@ def merge_into(
         .select(*data_cols, DELETED_COL)
     )
 
-    stats = MergeStats(epoch=epoch)
     if collect_stats:
         counts = {r[0]: int(r[1]) for r in
                   resolved.groupBy(ACTION_COL).count().collect()}
@@ -302,20 +298,6 @@ def merge_into(
     dirname = table.write_buckets(out, affected,
                                   salt_factor=max(cfg.salt_factor, 1),
                                   write_schema=schema)
-    new = table.commit(
-        "merge_into", {b: dirname for b in affected},
-        props_update=({ekey: str(epoch)} if epoch is not None else {}),
-        summary={
-            "affected_buckets": len(affected),
-            "rows_matched": stats.rows_matched,
-            "rows_inserted": stats.rows_inserted,
-            "rows_deleted": stats.rows_deleted,
-            "merge_lsn": lsn,
-        },
-        expected_parent=snap.snapshot_id,
-        max_retries=cfg.commit_retries,
-    )
-    stats.affected_buckets = len(affected)
-    stats.snapshot_id = new.snapshot_id
     stats.extra["merge_lsn"] = lsn
-    return stats
+    return commit_epoch(table, snap, cfg, stats, "merge_into", dirname,
+                        affected, merge_lsn=lsn)

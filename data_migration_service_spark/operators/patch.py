@@ -67,8 +67,11 @@ from data_migration_service_spark.operators.merge import (
     SALT_COL,
     SIDE_COL,
     MergeStats,
-    epoch_key,
+    batch_lineage,
+    commit_epoch,
+    replayed,
     salt_expr,
+    side_stats,
 )
 from data_migration_service_spark.tables.lake import (
     BUCKET_COL,
@@ -279,10 +282,9 @@ def patch_apply(
     end-to-end (fused (bucket, salt) repartition serves the fold's groupBy
     and the writer's layout)."""
     snap = table.current()
-    ekey = epoch_key(cfg)
-    if epoch is not None and epoch <= int(snap.props.get(ekey, "-1")):
-        return MergeStats(epoch=epoch, skipped=True,
-                          snapshot_id=snap.snapshot_id)
+    skip = replayed(snap, cfg, epoch)
+    if skip is not None:
+        return skip
 
     schema = snap.schema()
     for col in (CELL_LSNS_COL, DEL_LSN_COL):
@@ -303,22 +305,12 @@ def patch_apply(
         BUCKET_COL, bucket_expr(snap.layout_cols(), snap.n_buckets))
 
     # affected buckets + per-bucket lineage in one keys-sized pass
-    bucket_rows = (
-        src.groupBy(BUCKET_COL)
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.min(cfg.lsn_col).alias("lo"), F.max(cfg.lsn_col).alias("hi"))
-        .collect())
-    affected = sorted(int(r[BUCKET_COL]) for r in bucket_rows)
-    lineage = {int(r[BUCKET_COL]): {"rows": int(r["n"]),
-                                    "lsn_min": int(r["lo"]),
-                                    "lsn_max": int(r["hi"])}
-               for r in bucket_rows}
+    lineage = batch_lineage(src, cfg.lsn_col)
+    affected = sorted(lineage)
+    stats = MergeStats(epoch=epoch)
     if not affected:
-        new = table.commit("merge-patch", {}, props_update=(
-            {ekey: str(epoch)} if epoch is not None else {}),
-            summary={"rows": 0}, expected_parent=snap.snapshot_id,
-            publish=publish, max_retries=cfg.commit_retries)
-        return MergeStats(epoch=epoch, snapshot_id=new.snapshot_id)
+        return commit_epoch(table, snap, cfg, stats, "merge-patch",
+                            publish=publish)
 
     shaped_src = _shape_events(src, data_cols, cfg.lsn_col, cfg.op_col,
                                fields_col).withColumn(SIDE_COL, F.lit(1))
@@ -335,20 +327,8 @@ def patch_apply(
                          group_cols=[BUCKET_COL, SALT_COL, *keys],
                          with_sides=True)
 
-    stats = MergeStats(epoch=epoch)
     if collect_stats:
-        agg = merged.agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sum(((F.col("_has_src") == 1) & (F.col("_has_tgt_min") == 0))
-                  .cast("long")).alias("matched"),
-            F.sum(((F.col("_has_src") == 1) & (F.col("_has_tgt_min") == 1))
-                  .cast("long")).alias("inserted"),
-            F.sum((F.col(DELETED_COL) & (F.col("_has_src") == 1))
-                  .cast("long")).alias("deleted"),
-        ).collect()[0]
-        stats.rows_matched = int(agg["matched"] or 0)
-        stats.rows_inserted = int(agg["inserted"] or 0)
-        stats.rows_deleted = int(agg["deleted"] or 0)
+        side_stats(merged, stats)
 
     out_cols = []
     for f in schema.fields:
@@ -358,22 +338,8 @@ def patch_apply(
     out = merged.select(*out_cols, F.col(BUCKET_COL))
     dirname = table.write_buckets(out, affected, write_schema=schema,
                                   pre_partitioned=True)
-    new = table.commit(
-        "merge-patch", {b: dirname for b in affected},
-        props_update=({ekey: str(epoch)} if epoch is not None else {}),
-        summary={"affected_buckets": len(affected),
-                 "rows_matched": stats.rows_matched,
-                 "rows_inserted": stats.rows_inserted,
-                 "rows_deleted": stats.rows_deleted},
-        expected_parent=snap.snapshot_id,
-        publish=publish,
-        max_retries=cfg.commit_retries,
-    )
-    stats.affected_buckets = len(affected)
-    stats.snapshot_id = new.snapshot_id
-    stats.extra["bucket_lineage"] = lineage
-    stats.rows_in_batch = sum(v["rows"] for v in lineage.values())
-    return stats
+    return commit_epoch(table, snap, cfg, stats, "merge-patch", dirname,
+                        affected, lineage=lineage, publish=publish)
 
 
 def read_patched(table: SnapshotTable,

@@ -87,13 +87,11 @@ def get_spark(
         # zstd over snappy: measured 25-30% faster parquet writes on the CDC
         # content workload AND ~45% smaller files (38->21 MB per 1.1M-row
         # delta) — less bytes through the bandwidth-bound write path; also
-        # the right storage trade at 100 TB. Env override for A/B runs.
-        .config("spark.sql.parquet.compression.codec",
-                os.environ.get("DMS_PARQUET_CODEC", "zstd"))
-        # shuffle/broadcast codec, A/B-able the same way (lz4 = Spark
-        # default; zstd trades CPU for bytes through the shuffle path)
-        .config("spark.io.compression.codec",
-                os.environ.get("DMS_SHUFFLE_CODEC", "lz4"))
+        # the right storage trade at 100 TB.
+        .config("spark.sql.parquet.compression.codec", "zstd")
+        # shuffle/broadcast codec: lz4 (Spark's default); zstd measured no
+        # faster (BENCH.md, "zstd shuffle codec")
+        .config("spark.io.compression.codec", "lz4")
         # NOTE: an oversized, lazily-faulted local-mode heap is actively
         # harmful — with 32 concurrent tasks a 48g heap showed 3-5x wall
         # regressions (first-touch page faults + GC over the huge young gen
@@ -116,7 +114,7 @@ def get_spark(
         # by AQE-coalesced partition size reduce-side, so 1M keys in-map is
         # safe at any scale where splits are sized sanely.
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-                os.environ.get("DMS_AGG_FALLBACK_KEYS", "1048576"))
+                "1048576")
     )
     if master.startswith("local-cluster["):
         # separate executor JVMs (the truest sandbox analogue of "N

@@ -28,7 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_migration_service_spark.config import EngineConfig
-from data_migration_service_spark.operators.merge import MergeStats
+from data_migration_service_spark.operators.merge import (
+    MergeStats,
+    stage_audit_publish,
+)
 from data_migration_service_spark.operators.patch import apply_changes
 from data_migration_service_spark.registry import (
     SchemaRegistry,
@@ -191,31 +194,13 @@ class ReplayEngine:
         if self.audit_gate is None:
             stats = apply_changes(self.table, batch, self.cfg, epoch=epoch)
         else:
-            if self.table.staged_snapshots():
-                # orphan of a stream killed between stage and publish:
-                # unpublished by definition (see Engine.apply_audited),
-                # discard so this restart's stage can take the id
-                self.table.discard_staged()
-            stats = apply_changes(self.table, batch, self.cfg, epoch=epoch,
-                                  publish=False)
-            if not stats.skipped:
-                staged = self.table.load_snapshot(stats.snapshot_id)
-                if self.audit_gate(self.table.read(snapshot=staged)):
-                    self.table.publish(staged.snapshot_id)
-                    ripe = [b for b, ds in staged.deltas.items()
-                            if len(ds) >= self.cfg.compact_threshold]
-                    if ripe and self.cfg.merge_mode == "mor":
-                        from data_migration_service_spark.operators.merge import (
-                            compact,
-                        )
-
-                        compact(self.table, self.cfg, buckets=ripe)
-                else:
-                    self.table.discard_staged(staged.snapshot_id)
-                    raise AuditFailed(
-                        f"epoch {epoch}: audit gate rejected the staged "
-                        f"snapshot {staged.snapshot_id}; table remains at "
-                        f"{self.table.current().snapshot_id}")
+            stats, published = stage_audit_publish(
+                self.table, batch, self.cfg, epoch, self.audit_gate)
+            if not (stats.skipped or published):
+                raise AuditFailed(
+                    f"epoch {epoch}: audit gate rejected the staged "
+                    f"snapshot {stats.snapshot_id}; table remains at "
+                    f"{self.table.current().snapshot_id}")
         for ix in self.indexes:
             ix.sync(self.table)
         for mv in self.views:

@@ -533,8 +533,7 @@ class SnapshotTable:
         # space-filling curve). The merge key still follows, keeping
         # point-lookup pruning; "none" opts out entirely.
         sort_keys = [c for c in snap.key_cols if c in df.columns]
-        default_sort = os.environ.get("DMS_WRITE_SORT", "keys")  # A/B knob
-        ws = snap.props.get("write_sort", default_sort)
+        ws = snap.props.get("write_sort", "keys")
         cluster = ([c.strip() for c in ws[5:].split(",")
                     if c.strip() and c.strip() in df.columns]
                    if ws.startswith("cols:") else [])

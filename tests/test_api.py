@@ -2,6 +2,7 @@
 status -> verify -> targeted re-replay -> cleanup)."""
 
 import pyspark.sql.types as T
+import pytest
 from pyspark.sql import functions as F
 
 from data_migration_service_spark.api import Engine, EngineGroup, JobLock
@@ -14,12 +15,12 @@ from data_migration_service_spark.tables.lake import SnapshotTable
 from tests.test_merge import TABLE_SCHEMA
 
 
-def make_engine(spark, tmp_path, **cfg_kw):
+def make_engine(spark, tmp_path, merge_mode="mor", **cfg_kw):
     SnapshotTable.create(spark, str(tmp_path / "repos"), TABLE_SCHEMA,
                          ["repo", "path"], 16)
     cfg = EngineConfig(
         table_path=str(tmp_path / "repos"), n_buckets=16,
-        checkpoint_path=str(tmp_path / "ckpt"), merge_mode="mor",
+        checkpoint_path=str(tmp_path / "ckpt"), merge_mode=merge_mode,
         **cfg_kw,
     )
     return Engine(spark, cfg)
@@ -677,14 +678,14 @@ def test_repair_incremental_scopes_to_changed_buckets(spark, tmp_path):
     assert not rep2["applied"] and rep2["n_upserts"] + rep2["n_deletes"] == 0
 
 
-def test_update_where_cdc_semantics(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_update_where_cdc_semantics(spark, tmp_path, mode):
     """UPDATE expressed as a CDC batch: values change, LSNs move past the
     high-watermark (so the changefeed classifies `update` and downstream
     consumers stay consistent), tombstones are untouched, and the keyed
-    path prunes to hit buckets."""
-    import pytest
-
-    eng = make_engine(spark, tmp_path)
+    path prunes to hit buckets. `n_updated` counts the updated rows in
+    both write modes."""
+    eng = make_engine(spark, tmp_path, merge_mode=mode)
     ch = gen_changes(spark, 1500, n_repos=8, n_paths_per_repo=15).cache()
     ch.write.parquet(str(tmp_path / "events"))
     eng.replay(str(tmp_path / "events"), streaming=False)

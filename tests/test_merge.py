@@ -273,3 +273,80 @@ def test_write_sort_clustering_columns(spark, tmp_path):
         rows = list(zip(g["lang"], g["repo"], g["path"]))
         assert rows == sorted(rows), "file not clustered by (lang, key)"
     assert_state_matches(t, ch)
+
+
+SUMMARY_KEYS = ("affected_buckets", "rows_matched", "rows_inserted",
+                "rows_deleted")
+
+
+@pytest.mark.parametrize("writer", ["cow", "mor", "patch", "merge_into"])
+def test_every_writer_runs_the_epoch_protocol(spark, tmp_path, writer):
+    """One exactly-once protocol for every writer: each epoch commit
+    carries the affected-bucket and matched / inserted / deleted summary
+    of its stats, a replayed epoch returns skipped=True and commits
+    nothing, and an empty batch commits the epoch tag alone."""
+    from data_migration_service_spark.operators.merge_into import merge_into
+    from data_migration_service_spark.operators.patch import (
+        create_patch_table,
+        patch_apply,
+    )
+    from tests.test_patch import DATA_SCHEMA, ev, events_df
+
+    root = str(tmp_path / "t")
+    cfg = EngineConfig(table_path=root, n_buckets=4,
+                       merge_mode=writer if writer != "merge_into" else "cow")
+    if writer == "patch":
+        t = create_patch_table(spark, root, DATA_SCHEMA, ["repo", "path"], 4)
+        batches = [
+            events_df(spark, [ev("r1", "a", 1, "insert", content="x"),
+                              ev("r2", "b", 2, "insert", content="y")]),
+            events_df(spark, [ev("r1", "a", 3, "patch", ["lang"], lang="go"),
+                              ev("r2", "b", 4, "delete"),
+                              ev("r3", "c", 5, "insert", content="z")]),
+        ]
+
+        def apply(b, e):
+            return patch_apply(t, b, cfg, epoch=e)
+    elif writer == "merge_into":
+        t = SnapshotTable.create(spark, root, TABLE_SCHEMA, ["repo", "path"], 4)
+        src = "repo string, path string, lang string"
+        batches = [
+            spark.createDataFrame([("r1", "a", "py"), ("r2", "b", "c")], src),
+            spark.createDataFrame([("r1", "a", "go"), ("r2", "b", "x"),
+                                   ("r3", "c", "rs")], src),
+        ]
+
+        def apply(b, e):
+            return merge_into(
+                t, b, cfg, epoch=e, not_matched={},
+                matched=[{"action": "delete", "condition": "s.lang = 'x'"},
+                         {"action": "update", "set": {"lang": "s.lang"}}])
+    else:
+        t = SnapshotTable.create(spark, root, TABLE_SCHEMA, ["repo", "path"], 4)
+        ch = gen_changes(spark, 600, n_repos=4, n_paths_per_repo=8).cache()
+        batches = [ch.where(F.col("lsn") <= 300), ch.where(F.col("lsn") > 300)]
+
+        def apply(b, e):
+            return cdc_apply(t, b, cfg, epoch=e)
+
+    for e, b in enumerate(batches):
+        st = apply(b, e)
+        assert not st.skipped and st.affected_buckets > 0
+        assert st.snapshot_id == t.current().snapshot_id
+        summary = t.current().summary
+        assert {k: summary[k] for k in SUMMARY_KEYS} == {
+            k: getattr(st, k) for k in SUMMARY_KEYS}
+        assert st.rows_after_dedup == st.rows_matched + st.rows_inserted > 0
+    assert st.rows_matched > 0 and st.rows_deleted > 0
+
+    head = t.current().snapshot_id
+    for e, b in enumerate(batches):
+        st = apply(b, e)
+        assert st.skipped and st.snapshot_id == head
+    assert t.current().snapshot_id == head
+
+    st = apply(batches[0].limit(0), 2)
+    assert not st.skipped and st.snapshot_id == head + 1
+    assert t.current().props["epoch"] == "2"
+    assert {k: t.current().summary[k] for k in SUMMARY_KEYS} == dict.fromkeys(
+        SUMMARY_KEYS, 0)

@@ -317,3 +317,43 @@ def test_concurrent_routing_uses_private_views(spark, group, monkeypatch):
     got = group.sql(queries[0], aligned="require").collect()
     assert Counter(map(tuple, got)) == want[0]
     assert Counter(map(tuple, inner[0])) == want[1]
+
+
+def test_concurrent_naive_sql_keeps_its_views(spark, group):
+    """The naive path registers views under the group's table names; two
+    threads running different aligned="off" queries on one session must
+    not drop or replace each other's views mid-query."""
+    queries = [
+        "SELECT count(*) AS n FROM repos",
+        "SELECT lang, count(*) AS n FROM repos GROUP BY lang",
+        "SELECT repo, count(*) AS n FROM chunks GROUP BY repo",
+        "SELECT Lang, count(*) AS n FROM langs GROUP BY Lang",
+        "SELECT a.repo, count(*) AS n FROM repos a JOIN chunks b "
+        "ON a.repo = b.repo AND a.path = b.path GROUP BY a.repo",
+        "SELECT b.Lang, max(a.lsn) AS hi FROM repos a JOIN langs b "
+        "ON a.repo = b.repo AND a.path = b.path GROUP BY b.Lang",
+    ]
+    want = [Counter(map(tuple, group.sql(q, aligned="off").collect()))
+            for q in queries]
+    errors: list[Exception] = []
+    start = threading.Barrier(2)
+
+    def worker(order: list[int]) -> None:
+        try:
+            start.wait(timeout=60)
+            for i in order:
+                got = group.sql(queries[i], aligned="off").collect()
+                assert Counter(map(tuple, got)) == want[i], queries[i]
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    orders = [list(range(6)), list(range(5, -1, -1))]
+    threads = [threading.Thread(target=worker, args=(o,)) for o in orders]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=600)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    assert not {"repos", "chunks", "langs"} & {
+        t.name for t in spark.catalog.listTables()}

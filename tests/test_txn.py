@@ -190,3 +190,36 @@ def test_prune_txns_folds_and_preserves_pins(spark, tmp_path):
     assert prune_txns(cat, keep_last=0) >= 1   # folds up TO the pending one
     rest = sorted(f for f in os.listdir(cat) if f.startswith("txn-"))
     assert rest[0] == "txn-00000006.json"      # pending survives
+
+
+def test_apply_all_atomic_compacts_mor_tables(spark, tmp_path):
+    """Atomic epochs stage with publish=False, so MOR compaction runs after
+    the group commit: delta depth stays below compact_threshold, the state
+    stays exact, and the transaction's pinned snapshots stay readable."""
+    from data_migration_service_spark.api import EngineGroup
+    from data_migration_service_spark.fixtures.cdc import expected_final_state
+    from data_migration_service_spark.tables.txn import consistent_snapshots
+
+    cfgs = {}
+    for name in ("a", "b"):
+        root = str(tmp_path / name)
+        SnapshotTable.create(spark, root, TABLE_SCHEMA, ["repo", "path"], 4)
+        cfgs[name] = EngineConfig(table_path=root, n_buckets=4,
+                                  merge_mode="mor", compact_threshold=2)
+    grp = EngineGroup(spark, cfgs)
+    cat = str(tmp_path / "catalog")
+    logs = {n: gen_changes(spark, 400, n_repos=4, n_paths_per_repo=8,
+                           seed=s).cache() for n, s in (("a", 1), ("b", 2))}
+    for e in range(4):
+        lo, hi = 100 * e + 1, 100 * (e + 1)
+        grp.apply_all_atomic(
+            {n: c.where(F.col("lsn").between(lo, hi))
+             for n, c in logs.items()}, epoch=e, catalog_root=cat)
+    pins = consistent_snapshots(cat)
+    for name, eng in grp.engines.items():
+        head = eng.table.current()
+        depth = max((len(ds) for ds in head.deltas.values()), default=0)
+        assert depth < 2, (name, head.deltas)
+        assert eng.verify(expected_final_state(logs[name])).consistent
+        pinned = eng.table.read(snapshot=eng.table.load_snapshot(pins[name]))
+        assert pinned.count() == eng.table.read().count()

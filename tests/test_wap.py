@@ -215,3 +215,36 @@ def test_maintenance_plan_never_flags_staged_as_expirable(spark, tmp_path):
     staged_dirs = {d for ds in t.load_snapshot(staged.snapshot_id)
                    .deltas.values() for d in ds}
     assert staged_dirs.isdisjoint(set(plan["expire"]["unreferenced_dirs"]))
+
+
+def test_audited_replay_epoch_reports_like_unaudited(spark, tmp_path):
+    """A MOR epoch that hits compact_threshold reports the same stats
+    under ReplayEngine(audit_gate=) as without it: the compacted HEAD as
+    snapshot id (in the lineage record too) and compacted_buckets."""
+    from data_migration_service_spark.fixtures.cdc import gen_changes
+    from data_migration_service_spark.streaming.replay import ReplayEngine
+    from tests.test_merge import TABLE_SCHEMA
+
+    ch = gen_changes(spark, 600, n_repos=4, n_paths_per_repo=8).cache()
+    seen = {}
+    for name, gate in (("plain", None), ("audited", lambda df: True)):
+        root = str(tmp_path / name)
+        t = SnapshotTable.create(spark, root, TABLE_SCHEMA, ["repo", "path"],
+                                 4)
+        cfg = EngineConfig(table_path=root, n_buckets=4, merge_mode="mor",
+                           compact_threshold=2,
+                           checkpoint_path=str(tmp_path / f"ckpt-{name}"))
+        rep = ReplayEngine(spark, t, cfg, audit_gate=gate)
+        stats = [rep.apply_batch(ch.where(F.col("lsn").between(lo, hi)), e)
+                 for e, (lo, hi) in enumerate([(1, 300), (301, 600)])]
+        head = t.current()
+        assert head.summary["operation"] == "compact"
+        assert stats[-1].snapshot_id == head.snapshot_id
+        assert rep.lineage()[-1]["snapshot_id"] == head.snapshot_id
+        assert stats[-1].extra.get("compacted_buckets", 0) > 0
+        seen[name] = [
+            (s.snapshot_id, s.affected_buckets, s.rows_in_batch,
+             s.rows_after_dedup, s.rows_matched, s.rows_inserted,
+             s.rows_deleted, s.extra.get("compacted_buckets"))
+            for s in stats]
+    assert seen["plain"] == seen["audited"]
