@@ -44,8 +44,7 @@ from data_migration_service_spark.operators.merge import (
     current_epoch,
     delete_where,
     maybe_broadcast_keys,
-    probe_key_hashes,
-    probe_keys,
+    probe,
     stage_audit_publish,
 )
 from data_migration_service_spark.operators.patch import apply_changes
@@ -249,15 +248,8 @@ class Engine:
         `keys` (reference: per-record re-migration with unlimited duplicate
         skip, DataMigrationService.java:312-342). Semi-join, never a
         string-built predicate (SURVEY §2 P6)."""
-        kdf = keys.select(*self.cfg.key_cols).distinct()
-        snap = self.table.current()
-        _, n_keys = probe_keys(kdf, list(self.cfg.key_cols),
-                               snap.n_buckets,
-                               bucket_cols=snap.layout_cols())
-        subset = events.join(
-            maybe_broadcast_keys(kdf, n_keys),
-            list(self.cfg.key_cols), "left_semi",
-        )
+        p = probe(keys, self.table.current())
+        subset = events.join(p.keys, list(self.cfg.key_cols), "left_semi")
         e = epoch if epoch is not None else current_epoch(self.table, self.cfg) + 1
         return apply_changes(self.table, subset, self.cfg, epoch=e)
 
@@ -485,7 +477,7 @@ class Engine:
         LIVE rows (tombstones are never updated). Key columns, the LSN
         and op columns are protected. Exactly one of `predicate` (boolean
         Column over the row — needs a scan, column-pruned by Catalyst) or
-        `keys` (merge-key DataFrame — bucket-pruned via `probe_keys`, NO
+        `keys` (merge-key DataFrame — bucket-pruned via `merge.probe`, NO
         table scan) selects the rows.
 
         All updated rows carry one LSN past the scoped high-watermark
@@ -506,16 +498,12 @@ class Engine:
                 f"schema: {sorted(names)})")
         hit_buckets = None
         if keys is not None:
-            kdf = keys.select(*key_cols).distinct()
-            hit_buckets, n_keys = probe_keys(kdf, key_cols, snap.n_buckets,
-                                             bucket_cols=snap.layout_cols())
-            hit_buckets = [b for b in hit_buckets
-                           if b in snap.buckets or snap.deltas.get(b)]
+            p = probe(keys, snap)
+            hit_buckets = p.buckets
             if not hit_buckets:
                 return {"n_updated": 0, "applied": False}
-            rows = (self.table.read(snapshot=snap, buckets=hit_buckets)
-                    .join(maybe_broadcast_keys(kdf, n_keys),
-                          key_cols, "left_semi"))
+            rows = self.table.read(snapshot=snap, buckets=hit_buckets,
+                                   keys=p.keys)
         else:
             rows = self.table.read(snapshot=snap).where(predicate)
         if update_lsn is None:
@@ -606,36 +594,34 @@ class Engine:
                snapshot: int | None = None) -> DataFrame:
         """Fetch current rows for a set of merge keys, touching only the
         buckets those keys hash into (reference: fetch-specific-records,
-        the read half of migrateSpecificRecords). The bucket set comes from
-        `bucket_expr` over the keys alone — a keys-sized job, never a table
-        scan — then a (size-gated) broadcast semi-join inside the pruned
-        read. Within each hit bucket, delta dirs whose key-Bloom sidecar
-        excludes every probed key are skipped at the driver
-        (lake.prune_deltas) — between compactions that turns an
-        N-delta-dir lookup into ~1 dir. The semi-join below is what makes
-        the pruned read correct: non-probed keys may lose delta winners,
-        probed keys never do (Bloom has no false negatives). `snapshot`
-        time-travels the lookup — "what did these keys look like at
-        snapshot N" — with identical pruning (sidecars are per-dir and
-        immutable, so they serve every snapshot referencing the dir)."""
+        the read half of migrateSpecificRecords).
+
+        The caller's key plan runs ONCE (`merge.probe`): one capped collect
+        yields the hit buckets, the key count, the Bloom hashes and a
+        local relation of the distinct keys, which the read then
+        broadcasts without running the caller's plan again. Within each
+        hit bucket, delta dirs whose key-Bloom sidecar excludes every
+        probed key are skipped at the driver (lake.prune_deltas) — between
+        compactions that turns an N-delta-dir lookup into ~1 dir. The
+        read's `keys=` semi-join runs on the raw base+delta union, below
+        the MOR reduce, so only the probed keys' rows are shuffled; it is
+        also what makes the pruned read correct (non-probed keys may lose
+        delta winners, probed keys never do: Bloom has no false
+        negatives). `snapshot` time-travels the lookup — "what did these
+        keys look like at snapshot N" — with identical pruning (sidecars
+        are per-dir and immutable, so they serve every snapshot
+        referencing the dir)."""
         snap = (self.table.load_snapshot(snapshot) if snapshot is not None
                 else self.table.current())
-        kdf = keys.select(*snap.key_cols).distinct()
-        hit, n_keys, hashes = probe_key_hashes(
-            kdf, list(snap.key_cols), snap.n_buckets,
-            bucket_cols=snap.layout_cols())
-        hit = [b for b in hit if b in snap.buckets or snap.deltas.get(b)]
-        if not hit:
+        p = probe(keys, snap)
+        if not p.buckets:
             return self.table.read(snapshot=snap, buckets=[], columns=columns)
-        if hashes is not None:
-            snap = self.table.prune_deltas(snap, hit, key_hashes=hashes)
+        if p.hashes is not None:
+            snap = self.table.prune_deltas(snap, p.buckets, key_hashes=p.hashes)
         # columns=: a point lookup for two fields of a wide row must not
         # drag every column through the MOR reduce (lake.read docstring)
-        return (
-            self.table.read(snapshot=snap, buckets=hit, columns=columns)
-            .join(maybe_broadcast_keys(kdf, n_keys),
-                  list(snap.key_cols), "left_semi")
-        )
+        return self.table.read(snapshot=snap, buckets=p.buckets,
+                               columns=columns, keys=p.keys)
 
     def blame(self, keys: DataFrame, last_epochs: int = 10_000) -> DataFrame:
         """Row provenance: which replay epoch(s) wrote each key's CURRENT

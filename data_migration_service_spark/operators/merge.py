@@ -55,7 +55,9 @@ across buckets; a hot *bucket* is still split across writer tasks via salt
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -456,8 +458,8 @@ def _apply_mor(table, src, snap, cfg, epoch, data_fields,
         # (its target read includes tombstones), so both modes classify a
         # re-insert-after-delete identically as "matched".
         # reduce=False: key EXISTENCE does not care which version wins, so
-        # the raw base+delta union (duplicates and all) feeds the semi-join
-        # directly — no LWW aggregate, and with no max_by(struct(all_cols))
+        # the raw base+delta union (duplicates and all) feeds the existence
+        # check directly — no LWW aggregate, and with no max_by(struct(all_cols))
         # in the way Catalyst prunes the scan down to the key columns
         tgt_keys = (
             table.read(snapshot=snap, buckets=affected, include_deleted=True,
@@ -466,13 +468,20 @@ def _apply_mor(table, src, snap, cfg, epoch, data_fields,
         )
         written = table.spark.read.schema(out_schema).parquet(
             *table.bucket_paths(dirname, affected))
-        agg = written.agg(
-            F.sum(F.col(DELETED_COL).cast("long")).alias("deleted")
-        ).collect()[0]
-        m = written.join(tgt_keys, keys, "left_semi").agg(
-            F.count(F.lit(1)).alias("matched")).collect()[0]
+        # ONE aggregate gives both counts: an EXISTS column (an existence
+        # join, no row multiplication by the union's duplicate keys)
+        # keeps every written row in view, so the deleted sum needs no
+        # job of its own
+        hit = tgt_keys.alias("_t").where(reduce(operator.and_, [
+            F.col(f"_t.{k}") == F.col(f"_w.{k}").outer() for k in keys
+        ])).exists()
+        agg = (written.alias("_w")
+               .select(F.col(DELETED_COL), hit.alias("_m"))
+               .agg(F.sum(F.col(DELETED_COL).cast("long")).alias("deleted"),
+                    F.count_if("_m").alias("matched"))
+               .collect()[0])
         total = sum(v["rows"] for v in lineage.values())
-        stats.rows_matched = int(m["matched"] or 0)
+        stats.rows_matched = int(agg["matched"] or 0)
         stats.rows_deleted = int(agg["deleted"] or 0)
         stats.rows_inserted = total - stats.rows_matched
 
@@ -545,28 +554,6 @@ def _write_delta_stats(table: SnapshotTable, dirname: str,
             "bloom": [format(x & 0xFFFFFFFFFFFFFFFF, "016x") for x in w],
         }
     table.write_dir_stats(dirname, {"bloom_bits": m, "buckets": buckets})
-
-
-def probe_key_hashes(
-    kdf: DataFrame, key_cols: list[str], n_buckets: int,
-    cap: int = 100_000,
-    bucket_cols: list[str] | None = None,
-) -> tuple[list[int], int, list[tuple[int, int]] | None]:
-    """probe_keys plus the raw Bloom-probe hash pairs of each key, for
-    driver-side delta-dir skipping (tables/lake.py `prune_deltas`). Past
-    `cap` distinct keys the hash collect is skipped (None) — dir pruning
-    is an optimization for SMALL targeted lookups; a giant key set reads
-    every delta anyway and must not balloon the driver."""
-    hits, n_keys = probe_keys(kdf, key_cols, n_buckets,
-                              bucket_cols=bucket_cols)
-    if n_keys > cap:
-        return hits, n_keys, None
-    cols = [F.col(c) for c in key_cols]
-    rows = kdf.select(
-        F.xxhash64(*cols).alias("_h1"),
-        F.xxhash64(*cols, F.lit("bloom2")).alias("_h2"),
-    ).collect()
-    return hits, n_keys, [(r["_h1"], r["_h2"]) for r in rows]
 
 
 def compact(table: SnapshotTable, cfg: EngineConfig,
@@ -692,6 +679,78 @@ def maybe_broadcast_keys(kdf: DataFrame, n_keys: int) -> DataFrame:
     return F.broadcast(kdf) if n_keys <= BROADCAST_KEY_LIMIT else kdf
 
 
+# a keyed call collects at most this many key rows to the driver; past it
+# the probe keeps the distributed path (no Bloom hashes, so no delta-dir
+# pruning — a giant key set reads every delta anyway)
+PROBE_KEY_CAP = 100_000
+
+
+@dataclass
+class KeyProbe:
+    """What a keyed call needs to know about its key set."""
+    keys: DataFrame     # semi-join side, broadcast-gated (maybe_broadcast_keys)
+    buckets: list[int]  # hit bucket ids under the probed layout
+    n_keys: int         # distinct keys
+    hashes: list[tuple[int, int]] | None  # Bloom probe pairs; None past cap
+
+
+def _probe(keys: DataFrame, key_cols: list[str], n_buckets: int,
+           bucket_cols: list[str] | None, cap: int) -> KeyProbe:
+    """Run the caller's key plan ONCE: one capped collect of (keys,
+    bucket, Bloom hashes), deduplicated on the driver (JVM side, so key
+    values keep their exact types), which yields the hit buckets, the key
+    count, the hashes and a local relation of the distinct keys, so
+    later semi-joins never run the caller's plan again. Past `cap` rows:
+    the distributed distinct of `probe_keys`, executed by each consumer."""
+    cols = [F.col(c) for c in key_cols]
+    sel = keys.select(
+        *key_cols,
+        bucket_expr(bucket_cols or key_cols, n_buckets).alias(BUCKET_COL),
+        F.xxhash64(*cols).alias("_h1"),
+        F.xxhash64(*cols, F.lit("bloom2")).alias("_h2"),
+    )
+    rows = sel.limit(cap + 1)._jdf.collectAsList()
+    if rows.size() > cap:
+        kdf = keys.select(*key_cols).distinct()
+        hits, n_keys = probe_keys(kdf, key_cols, n_buckets,
+                                  bucket_cols=bucket_cols)
+        return KeyProbe(maybe_broadcast_keys(kdf, n_keys), hits, n_keys, None)
+    spark = keys.sparkSession
+    jvm = spark.sparkContext._jvm
+    distinct = jvm.java.util.ArrayList(jvm.java.util.LinkedHashSet(rows))
+    local = DataFrame(spark._jsparkSession.createDataFrame(
+        distinct, sel._jdf.schema()), spark)
+    got = local.select(BUCKET_COL, "_h1", "_h2").collect()
+    return KeyProbe(
+        keys=F.broadcast(local.select(*key_cols)),
+        buckets=sorted({int(r[0]) for r in got}),
+        n_keys=len(got),
+        hashes=[(r[1], r[2]) for r in got],
+    )
+
+
+def probe(keys: DataFrame, snap) -> KeyProbe:
+    """The one key probe of every keyed path (lookup, replay_keys,
+    update_where, delete_where) against snapshot `snap`; `buckets` keeps
+    only the hit buckets `snap` holds data for."""
+    p = _probe(keys, list(snap.key_cols), snap.n_buckets, snap.layout_cols(),
+               PROBE_KEY_CAP)
+    p.buckets = [b for b in p.buckets if b in snap.buckets or snap.deltas.get(b)]
+    return p
+
+
+def probe_key_hashes(
+    kdf: DataFrame, key_cols: list[str], n_buckets: int,
+    cap: int = 100_000,
+    bucket_cols: list[str] | None = None,
+) -> tuple[list[int], int, list[tuple[int, int]] | None]:
+    """(hit buckets, distinct key count, raw Bloom-probe hash pairs) of a
+    key set, for driver-side delta-dir skipping (tables/lake.py
+    `prune_deltas`). Past `cap` keys the hashes are None."""
+    p = _probe(kdf, key_cols, n_buckets, bucket_cols, cap)
+    return p.buckets, p.n_keys, p.hashes
+
+
 def delete_where(table: SnapshotTable, cfg: EngineConfig, predicate=None,
                  keys: DataFrame | None = None) -> int:
     """Keyed/predicate delete (reference: targeted cleanup / TRUNCATE per
@@ -711,18 +770,13 @@ def delete_where(table: SnapshotTable, cfg: EngineConfig, predicate=None,
     if (keys is None) == (predicate is None):
         raise ValueError("delete_where takes exactly one of predicate / keys")
     if keys is not None:
-        kdf = keys.select(*snap.key_cols).distinct()
-        hit_buckets, n_keys = probe_keys(kdf, list(snap.key_cols),
-                                         snap.n_buckets,
-                                         bucket_cols=snap.layout_cols())
-        hit_buckets = [b for b in hit_buckets
-                       if b in snap.buckets or snap.deltas.get(b)]
+        p = probe(keys, snap)
+        hit_buckets = p.buckets
         if not hit_buckets:
             return snap.snapshot_id
         keep = (
             table.read(snapshot=snap, buckets=hit_buckets, include_deleted=True)
-            .join(maybe_broadcast_keys(kdf, n_keys),
-                  list(snap.key_cols), "left_anti")
+            .join(p.keys, list(snap.key_cols), "left_anti")
         )
     else:
         full = table.read(snapshot=snap, include_deleted=True)

@@ -128,15 +128,20 @@ def resolve_batch(
     envelope_cols: tuple[str, ...] = ("lsn", "op", "repo", "path", "ts", "schema_version"),
     payload_col: str = "payload",
     to_version: int | None = None,
+    versions: list[int] | None = None,
 ) -> DataFrame:
     """Normalize a mixed-version raw event batch to `to_version` column names.
 
     One `from_json` per version present (JVM expression, no Python), then the
     union aligns everything to the target version's column set; columns a
-    version doesn't know yet come out NULL.
+    version doesn't know yet come out NULL. `versions`: the distinct
+    `schema_version` values of `raw` when the caller already collected
+    them (default: one distinct-collect here).
     """
     target = registry.get(to_version) if to_version else registry.latest()
-    versions = [r[0] for r in raw.select("schema_version").distinct().collect()]
+    if versions is None:
+        versions = [r[0] for r in
+                    raw.select("schema_version").distinct().collect()]
     if not versions:
         versions = [target.version]  # empty batch: emit the right shape
     out_cols = [n for n, _ in target.columns]

@@ -150,14 +150,20 @@ class ReplayEngine:
                 "tools/submit_replay.py) so payloads can be decoded"
             )
         if self.registry is not None and "payload" in batch.columns:
-            vmax = batch.agg(F.max("schema_version")).collect()[0][0]
-            if vmax is not None:
-                apply_ddl_for_version(self.table, self.registry, int(vmax))
+            # one pass over the versions serves both the DDL step and the
+            # decode (resolve_batch would otherwise collect them again)
+            versions = [r[0] for r in
+                        batch.select("schema_version").distinct().collect()]
+            present = [v for v in versions if v is not None]
+            if present:
+                apply_ddl_for_version(self.table, self.registry,
+                                      int(max(present)))
                 # resolve to the version the TABLE is at (not registry
                 # latest): the table evolves only when a newer version is
                 # actually observed in the stream
                 applied = int(self.table.current().props.get("schema_version", "1"))
-                batch = resolve_batch(batch, self.registry, to_version=applied)
+                batch = resolve_batch(batch, self.registry, to_version=applied,
+                                      versions=versions)
         if self.transform is not None:
             batch = self.transform(batch)
             required = (*self.cfg.key_cols, self.cfg.lsn_col, self.cfg.op_col)

@@ -343,6 +343,7 @@ class SnapshotTable:
         reduce: bool = True,
         columns: Iterable[str] | None = None,
         with_gen: bool = False,
+        keys: DataFrame | None = None,
     ) -> DataFrame:
         """Read the table (optionally one snapshot / a bucket subset).
 
@@ -380,6 +381,16 @@ class SnapshotTable:
         (`reduce=False`) whose caller performs its own LWW (compaction,
         OPTIMIZE) pass ``with_gen=True`` to receive the `_gen` column and
         must order by the same pair.
+
+        `keys`: a DataFrame of merge-key rows (the key columns, by name);
+        only rows of those keys are returned. The semi-join is applied to
+        the raw base+delta union, BELOW the merge-on-read reduce: LWW
+        groups by the full merge key, so dropping other keys' rows first
+        cannot change a probed key's winner, and the reduce then shuffles
+        only the probed keys' rows instead of every row of the read
+        buckets. This is also what makes a `prune_deltas` snapshot safe
+        to read. A broadcast hint is the caller's choice
+        (operators/merge.probe gates it on the key count).
         """
         snap = snapshot or self.current()
         want = set(buckets) if buckets is not None else None
@@ -440,6 +451,8 @@ class SnapshotTable:
             df = parts[0]
             for p in parts[1:]:
                 df = df.unionByName(p)
+        if keys is not None:
+            df = df.join(keys, list(snap.key_cols), "left_semi")
         if has_delta and reduce:
             lsn_col = snap.props.get("lsn_col", "lsn")
             # carry GEN_COL through the winner struct when the caller asked
@@ -626,14 +639,14 @@ class SnapshotTable:
         the LSN interval — driver-side metadata, no Spark job.
 
         `key_hashes` are raw `(xxhash64(keys), xxhash64(keys,'bloom2'))`
-        pairs (collect them with `operators.merge.probe_key_hashes`); each
+        pairs (collected by `operators.merge.probe`); each
         dir's Bloom is tested at ITS OWN recorded bit width, so tables
         whose `bloom_bits` changed over time prune correctly. Bloom
         membership has no false negatives: a dir holding a probed key is
         never dropped, so a read of the pruned snapshot returns exactly
         the same rows FOR THE PROBED KEYS. Rows of other keys may lose
-        their delta winners — callers MUST apply a key filter (the
-        semi-join every targeted path already does).
+        their delta winners — callers MUST read the pruned snapshot
+        with `read(keys=)`, as every targeted path does.
         """
         import copy
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from data_migration_service_spark.config import EngineConfig
 from data_migration_service_spark.api import Engine
+from data_migration_service_spark.operators import merge
 from data_migration_service_spark.operators.merge import (
     cdc_apply,
     probe_key_hashes,
@@ -163,3 +164,77 @@ def test_probe_cap_skips_hash_collect(spark, tmp_path):
         F.lit("f").alias("path"))
     hits, n, hashes = probe_key_hashes(kdf, ["repo", "path"], 8, cap=10)
     assert n == 50 and hashes is None and hits
+
+
+KEYS = "repo string, path string"
+
+
+def overwrite_epoch(spark, t, cfg):
+    """Epoch 5 rewrites and deletes keys of earlier delta dirs."""
+    cdc_apply(t, spark.createDataFrame(
+        [("r0", "f0", "upd", 900, "update"), ("r1", "f1", None, 901, "delete")],
+        EVENTS), cfg, epoch=5)
+
+
+def test_lookup_runs_the_key_plan_once(spark, tmp_path):
+    """The probe, the Bloom hashes and the semi-join all come from ONE
+    execution of the caller's key plan (an RDD-backed frame, re-run by
+    every action on it)."""
+    t, cfg = make(spark, tmp_path, n_buckets=4)
+    apply_epochs(spark, t, cfg, n_epochs=3, keys_per_epoch=4)
+    keys = [("r0", "f1"), ("r2", "f3"), ("r9", "f9")]
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(row):
+        seen.add(1)
+        return row
+
+    kdf = spark.createDataFrame(
+        spark.sparkContext.parallelize(keys, 2).map(counted), KEYS)
+    rows = Engine(spark, cfg).lookup(kdf).collect()
+    assert sorted((r["repo"], r["path"]) for r in rows) == keys[:2]
+    assert seen.value == len(keys)
+
+
+def test_lookup_semi_join_sits_below_the_mor_reduce(spark, tmp_path):
+    t, cfg = make(spark, tmp_path, n_buckets=2)
+    apply_epochs(spark, t, cfg, n_epochs=3, keys_per_epoch=4)
+    overwrite_epoch(spark, t, cfg)
+    df = Engine(spark, cfg).lookup(
+        spark.createDataFrame([("r0", "f0"), ("r2", "f1")], KEYS))
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    agg = min(i for i, line in enumerate(lines) if "max_by" in line)
+    semi = [i for i, line in enumerate(lines) if "LeftSemi" in line]
+    assert semi and min(semi) > agg  # every semi-join under the reduce
+    assert sorted((r["repo"], r["content"]) for r in df.collect()) == [
+        ("r0", "upd"), ("r2", "c2-1")]
+
+
+def test_keyed_lookup_exact_past_cap_dups_absent_and_time_travel(
+        spark, tmp_path, monkeypatch):
+    t, cfg = make(spark, tmp_path, n_buckets=4)
+    apply_epochs(spark, t, cfg, n_epochs=3, keys_per_epoch=4)
+    before = t.current().snapshot_id
+    overwrite_epoch(spark, t, cfg)
+    eng = Engine(spark, cfg)
+    keys = [("r0", "f0"), ("r0", "f0"), ("r1", "f1"), ("r1", "f2"),
+            ("r2", "f3"), ("r2", "f3"), ("nope", "f0")]
+    kdf = spark.createDataFrame(keys, KEYS)
+    cols = ["repo", "path", "content", "lsn"]
+
+    def expected(snapshot=None):
+        snap = t.load_snapshot(snapshot) if snapshot else None
+        return sorted(tuple(r) for r in t.read(snapshot=snap).join(
+            kdf.distinct(), ["repo", "path"], "left_semi")
+            .select(*cols).collect())
+
+    def looked(snapshot=None):
+        return sorted(tuple(r) for r in eng.lookup(kdf, snapshot=snapshot)
+                      .select(*cols).collect())
+
+    want_now, want_then = expected(), expected(before)
+    assert want_now != want_then  # the overwrite epoch moved r0/f0, r1/f1
+    assert looked() == want_now and looked(before) == want_then
+    monkeypatch.setattr(merge, "PROBE_KEY_CAP", 2)  # distributed path
+    assert merge.probe(kdf, t.current()).hashes is None
+    assert looked() == want_now and looked(before) == want_then
