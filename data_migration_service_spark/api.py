@@ -294,6 +294,11 @@ class Engine:
         """Post-replay validation: per-row sha256(content) equality of the
         materialized table against the expected final state.
 
+        A table that agrees costs one aggregate over the key join of both
+        sides (verify.verify_state); the capped report and the per-group
+        counts run only when that pass finds a difference. A key repeated
+        on either side makes the result inconsistent.
+
         `sample_denominator=N` runs the deterministic 1/N key-sample canary
         instead of the full diff (verify.verify_sample) — the every-epoch
         mode at 100 TB; by default the salt rotates with the current epoch
