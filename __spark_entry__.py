@@ -817,10 +817,11 @@ def q_verify_sample(spark, sf):
 def q_bucket_verify_dirty(spark, sf):
     """Merkle level of the hierarchical verification
     (operators/verify.py:verify_hierarchical — the 100 TB verify shape):
-    per-bucket (count, hash_sum, hash_xor) signatures on each side, then a
-    signature diff over n_buckets rows. Only the buckets returned here ever
-    pay row-level work; an identical table returns zero rows and the whole
-    verification cost two scans plus a 64-row join."""
+    per-bucket (count, hash_sum, hash_xor) signatures of the row hash XOR
+    a key-hash slice on each side, then a signature diff over n_buckets
+    rows. Only the buckets returned here ever pay row-level work; an
+    identical table returns zero rows and the whole verification cost two
+    scans plus a 64-row join."""
     src, tgt = _li_sides(spark, sf)
     src_h = src.withColumn("_vh", F.sha2("content", 256))
     tgt_h = tgt.withColumn("_vh", F.sha2("content", 256))
@@ -868,11 +869,13 @@ WITH content_t AS (
   FROM content_t WHERE l_orderkey % 101 <> 0
 ), sb AS (
   SELECT ('0x' || substr(sha256('vbucket:' || CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)), 1, 8))::BIGINT % 64 AS bucket,
-         ('0x' || substr(sha256(content), 1, 8))::BIGINT AS h32
+         xor(coalesce(('0x' || substr(sha256(content), 1, 8))::BIGINT, 0),
+             ('0x' || substr(sha256('vbucket:' || CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)), 9, 8))::BIGINT) AS h32
   FROM src
 ), tb AS (
   SELECT ('0x' || substr(sha256('vbucket:' || CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)), 1, 8))::BIGINT % 64 AS bucket,
-         ('0x' || substr(sha256(content), 1, 8))::BIGINT AS h32
+         xor(coalesce(('0x' || substr(sha256(content), 1, 8))::BIGINT, 0),
+             ('0x' || substr(sha256('vbucket:' || CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)), 9, 8))::BIGINT) AS h32
   FROM tgt
 ), ss AS (
   SELECT bucket, count(*) AS n_rows, CAST(sum(h32) AS BIGINT) AS hash_sum,

@@ -41,7 +41,9 @@ compacted (deltas folded into a new base) when its delta depth reaches
 cfg.compact_threshold. At 10^10 events a copy-on-write rewrite per epoch is
 O(table) and unaffordable — mor keeps apply proportional to the batch and
 amortizes the rewrite over `compact_threshold` epochs, exactly the Iceberg
-MOR/positional-delete trade.
+MOR/positional-delete trade. An epoch is two actions: the dedup+write,
+then one aggregate over the written keys for the Bloom sidecar and the
+conflict counts (`_delta_stats`).
 
 `max_by(struct(cols), (lsn, side))` does LWW inside a single hash aggregate
 with map-side partial aggregation — cheaper than window row_number (no sort,
@@ -399,10 +401,13 @@ def _apply_mor(table, src, snap, cfg, epoch, data_fields,
     """Merge-on-read apply: LWW-dedup the batch within itself, append it as
     one delta dir, compact buckets whose delta depth hits the threshold.
 
-    Single data pass: dedup+write is the only Spark job; the affected-bucket
-    set and per-bucket lineage (rows, LSN range) come from the written
-    parquet FOOTERS afterwards (driver-side metadata, no second scan). No
-    target read on the apply path — O(batch), not O(table)."""
+    Two actions: the fused dedup+write, then ONE stats aggregate over the
+    written dir's key and tombstone columns (`_delta_stats`: the Bloom
+    sidecar and, with `collect_stats`, the matched/deleted counts against
+    the written buckets' target keys). The affected-bucket set and the
+    per-bucket lineage (rows, LSN range) come from the written parquet
+    FOOTERS (driver-side metadata, no scan). The target is read only for
+    the counts, and then only the key columns of the written buckets."""
     import uuid as _uuid
 
     keys = list(cfg.key_cols)
@@ -443,47 +448,11 @@ def _apply_mor(table, src, snap, cfg, epoch, data_fields,
     )
     lineage = table.dir_lineage(dirname, cfg.lsn_col)
     affected = sorted(lineage)
-    if affected:
-        # file-skipping sidecar, in place BEFORE the commit references the
-        # dir (immutable, unreachable until then — same rule as the data)
-        _write_delta_stats(table, dirname, lineage, cfg, out_schema,
-                           snap.n_buckets)
-
     stats = MergeStats(epoch=epoch)
     stats.extra["salt_factor"] = salt
-    if collect_stats and affected:
-        # column-pruned key probe of the affected buckets (NOT a rewrite):
-        # how many batch keys already exist in the target. Tombstoned keys
-        # count as existing — the cow aggregate's _matched sees them too
-        # (its target read includes tombstones), so both modes classify a
-        # re-insert-after-delete identically as "matched".
-        # reduce=False: key EXISTENCE does not care which version wins, so
-        # the raw base+delta union (duplicates and all) feeds the existence
-        # check directly — no LWW aggregate, and with no max_by(struct(all_cols))
-        # in the way Catalyst prunes the scan down to the key columns
-        tgt_keys = (
-            table.read(snapshot=snap, buckets=affected, include_deleted=True,
-                       reduce=False)
-            .select(*keys)
-        )
-        written = table.spark.read.schema(out_schema).parquet(
-            *table.bucket_paths(dirname, affected))
-        # ONE aggregate gives both counts: an EXISTS column (an existence
-        # join, no row multiplication by the union's duplicate keys)
-        # keeps every written row in view, so the deleted sum needs no
-        # job of its own
-        hit = tgt_keys.alias("_t").where(reduce(operator.and_, [
-            F.col(f"_t.{k}") == F.col(f"_w.{k}").outer() for k in keys
-        ])).exists()
-        agg = (written.alias("_w")
-               .select(F.col(DELETED_COL), hit.alias("_m"))
-               .agg(F.sum(F.col(DELETED_COL).cast("long")).alias("deleted"),
-                    F.count_if("_m").alias("matched"))
-               .collect()[0])
-        total = sum(v["rows"] for v in lineage.values())
-        stats.rows_matched = int(agg["matched"] or 0)
-        stats.rows_deleted = int(agg["deleted"] or 0)
-        stats.rows_inserted = total - stats.rows_matched
+    if affected:
+        _delta_stats(table, snap, dirname, lineage, cfg, out_schema,
+                     stats if collect_stats else None)
 
     commit_epoch(table, snap, cfg, stats, "merge-mor", dirname, affected,
                  lineage=lineage, delta=True, publish=publish)
@@ -492,58 +461,76 @@ def _apply_mor(table, src, snap, cfg, epoch, data_fields,
     return stats
 
 
-def _write_delta_stats(table: SnapshotTable, dirname: str,
-                       lineage: dict[int, dict], cfg: EngineConfig,
-                       out_schema: T.StructType, n_buckets: int) -> None:
-    """Per-(dir, bucket) key-Bloom + LSN-range sidecar for the delta dir
-    just written (tables/lake.py `prune_deltas`). One NARROW aggregate over
-    the dir's own key columns (O(batch), key cols only — the stats probe
-    already re-reads this dir, so the marginal cost is one small job);
-    rows/LSN ranges are reused from the footer lineage, not recomputed.
+def _delta_stats(table: SnapshotTable, snap, dirname: str,
+                 lineage: dict[int, dict], cfg: EngineConfig,
+                 out_schema: T.StructType, stats: MergeStats | None) -> None:
+    """ONE aggregate over the delta dir just written: its file-skipping
+    sidecar and, when `stats` is given, the epoch's conflict counts. Rows
+    and LSN ranges come from the footer lineage, not from this scan.
 
-    The Bloom is 2-probe over `bloom_bits` bits, laid out as 64-bit lanes
-    folded with `bit_or` — pure codegen aggregate, no UDF. Probe hashes are
-    `xxhash64(keys)` / `xxhash64(keys, 'bloom2')`, the same JVM hash the
-    reader collects driver-side (probe_key_hashes), so writer and prober
-    agree bit-for-bit."""
+    Counts: an EXISTS column against the written buckets' target keys (an
+    existence join: the raw base+delta union's duplicate keys do not
+    multiply rows; `reduce=False` prunes the target scan to the keys).
+    Tombstoned keys exist, as in the cow aggregate, so a
+    re-insert-after-delete is matched in both modes.
+
+    Sidecar (tables/lake.py `prune_deltas`): a 2-probe Bloom over
+    `bloom_bits` bits in 64-bit lanes. The probes are `xxhash64(keys)` /
+    `xxhash64(keys, 'bloom2')` over the FULL merge key, as the reader
+    probes (`probe`); buckets follow the LAYOUT columns. Each row explodes
+    into its 2 probes as (bucket, lane, word) rows folded by `bit_or`:
+    O(probes) per row (a per-lane `when` cost ~60% of the whole apply at
+    4096 bits, ~15x more), at most n_buckets * lanes shuffled rows. The
+    counts ride the same aggregate, summed over the first probe only;
+    with no Bloom they are one global aggregate and no sidecar is
+    written."""
     m = cfg.bloom_bits
-    if not m or m % 64 or not lineage:
+    bloom = bool(m) and not m % 64
+    if not bloom and stats is None:
+        return
+    keys = list(cfg.key_cols)
+    affected = sorted(lineage)
+    df = table.spark.read.schema(out_schema).parquet(
+        *table.bucket_paths(dirname, affected)).alias("_w")
+    cols, aggs, group = [], [], []
+    if stats is not None:
+        tgt_keys = table.read(snapshot=snap, buckets=affected,
+                              include_deleted=True, reduce=False).select(*keys)
+        hit = tgt_keys.alias("_t").where(reduce(operator.and_, [
+            F.col(f"_t.{k}") == F.col(f"_w.{k}").outer() for k in keys
+        ])).exists()
+        cols += [F.col(DELETED_COL).cast("long").alias("_d"),
+                 hit.cast("long").alias("_m")]
+    first = F.lit(True)
+    if bloom:
+        kc = [F.col(c) for c in keys]
+        cols += [
+            bucket_expr(snap.layout_cols(), snap.n_buckets).alias(BUCKET_COL),
+            F.posexplode(F.array(
+                F.pmod(F.xxhash64(*kc), F.lit(m)),
+                F.pmod(F.xxhash64(*kc, F.lit("bloom2")), F.lit(m)),
+            )).alias("_i", "_pos"),
+        ]
+        first = F.col("_i") == 0
+        group = [BUCKET_COL, (F.col("_pos") / 64).cast("int").alias("_lane")]
+        aggs.append(F.bit_or(F.expr(
+            "shiftleft(1L, cast(pmod(_pos, 64) as int))")).alias("_word"))
+    if stats is not None:
+        aggs += [F.sum(F.when(first, F.col(c))).alias(c) for c in ("_d", "_m")]
+    rows = df.select(*cols).groupBy(*group).agg(*aggs).collect()
+
+    if stats is not None:
+        stats.rows_matched = sum(int(r["_m"] or 0) for r in rows)
+        stats.rows_deleted = sum(int(r["_d"] or 0) for r in rows)
+        stats.rows_inserted = (sum(v["rows"] for v in lineage.values())
+                               - stats.rows_matched)
+    if not bloom:
         return
     lanes = m // 64
-    keys = list(cfg.key_cols)
-    # Bloom probes hash the FULL merge key (matching the reader's
-    # probe_key_hashes); the per-bucket grouping follows the table's
-    # LAYOUT columns, which may be a key prefix (Snapshot.bucket_cols)
-    layout = table.current().layout_cols()
-    key_schema = T.StructType([f for f in out_schema.fields if f.name in keys])
-    kdf = table.spark.read.schema(key_schema).parquet(
-        *table.bucket_paths(dirname, sorted(lineage)))
-    # Shape: each row contributes its 2 probe bits as (bucket, lane, word)
-    # rows, folded by ONE bit_or aggregate over (bucket, lane). Per-row
-    # work is O(probes), not O(lanes) — the per-lane `when` formulation
-    # cost ~60% of the whole apply at 4096 bits (64 conditional exprs per
-    # row); this shape measured ~15x cheaper. The shuffle is (bucket,
-    # lane, long) triples pre-combined map-side to <= n_buckets*lanes rows.
-    h1 = F.xxhash64(*[F.col(c) for c in keys])
-    h2 = F.xxhash64(*[F.col(c) for c in keys], F.lit("bloom2"))
-    probes = F.array(F.pmod(h1, F.lit(m)), F.pmod(h2, F.lit(m)))
-    df = (
-        kdf.select(
-            bucket_expr(layout, n_buckets).alias(BUCKET_COL),
-            F.explode(probes).alias("_pos"),
-        )
-        .select(
-            BUCKET_COL,
-            (F.col("_pos") / 64).cast("int").alias("_lane"),
-            F.expr("shiftleft(1L, cast(pmod(_pos, 64) as int))").alias("_w"),
-        )
-        .groupBy(BUCKET_COL, "_lane")
-        .agg(F.bit_or("_w").alias("_w"))
-    )
     words: dict[int, list[int]] = {}
-    for r in df.collect():
+    for r in rows:
         words.setdefault(int(r[BUCKET_COL]), [0] * lanes)[
-            int(r["_lane"])] |= int(r["_w"])
+            int(r["_lane"])] |= int(r["_word"])
     buckets = {}
     for b, lin in lineage.items():
         w = words.get(b, [0] * lanes)
@@ -553,6 +540,8 @@ def _write_delta_stats(table: SnapshotTable, dirname: str,
             "lsn_max": lin.get("lsn_max"),
             "bloom": [format(x & 0xFFFFFFFFFFFFFFFF, "016x") for x in w],
         }
+    # in place BEFORE the commit references the dir (immutable and
+    # unreachable until then, the same rule as the data files)
     table.write_dir_stats(dirname, {"bloom_bits": m, "buckets": buckets})
 
 

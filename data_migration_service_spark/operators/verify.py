@@ -140,7 +140,8 @@ def verify_state(
     the capped report (only for a non-OK status), `count_check`, and, when
     a key repeats (the side flags then count join rows, not rows), exact
     side counts. A repeated key makes the result inconsistent, with the
-    number of such keys in `extra["duplicate_keys"]`.
+    number of such keys in `extra["duplicate_keys"]`. So does a key on one
+    side only, even when `hash_diff` classifies its row OK (NULL content).
     """
     group_cols = group_cols or [key_cols[0]]
     h = content_sha256(content_col)
@@ -188,7 +189,7 @@ def verify_state(
     counts = count_check(source, target, group_cols)
     res.count_by_group = [r.asDict() for r in counts.where(~F.col("count_ok"))
                           .limit(report_cap).collect()]
-    res.consistent = (n_bad == 0 and dup == 0
+    res.consistent = (n_bad == 0 and dup == 0 and alone == 0
                       and res.source_rows == res.target_rows)
     return res
 
@@ -248,6 +249,20 @@ def recheck_values(
     )
 
 
+def _key_sha(key_cols: list[str], salt: str) -> Column:
+    """sha256(salt ':' k1 ':' k2 …) hex of a row's KEY: pure function of
+    the key and engine-portable (the identical expression runs in ANSI
+    SQL)."""
+    return F.sha2(F.concat_ws(
+        ":", F.lit(salt), *[F.col(c).cast("string") for c in key_cols],
+    ), 256)
+
+
+def _hex32(hex_col: Column, start: int) -> Column:
+    """8 hex chars of `hex_col` from `start` (1-based) as a long."""
+    return F.conv(F.substring(hex_col, start, 8), 16, 10).cast("long")
+
+
 def sample_filter(key_cols: list[str], denominator: int,
                   salt: str = "verify") -> F.Column:
     """Deterministic ~1/denominator membership predicate over the KEY.
@@ -260,10 +275,7 @@ def sample_filter(key_cols: list[str], denominator: int,
     ANSI SQL). Hashing the key (never the payload) is what keeps missing /
     divergent rows inside the sample detectable: a corrupted or dropped row
     cannot hash itself out of its own sample membership."""
-    h = F.substring(
-        F.sha2(F.concat_ws(
-            ":", F.lit(salt), *[F.col(c).cast("string") for c in key_cols],
-        ), 256), 1, 8)
+    h = F.substring(_key_sha(key_cols, salt), 1, 8)
     return h < F.lit(format(int(16 ** 8 / max(denominator, 1)), "08x"))
 
 
@@ -335,11 +347,7 @@ def key_bucket(key_cols: list[str], n_buckets: int,
     both sides of a verification regardless of partitioning, cluster size,
     or engine — the property every stage of `verify_hierarchical` rests on.
     """
-    h = F.substring(
-        F.sha2(F.concat_ws(
-            ":", F.lit(salt), *[F.col(c).cast("string") for c in key_cols],
-        ), 256), 1, 8)
-    return F.pmod(F.conv(h, 16, 10).cast("long"), F.lit(n_buckets))
+    return F.pmod(_hex32(_key_sha(key_cols, salt), 1), F.lit(n_buckets))
 
 
 def bucket_signatures(
@@ -352,20 +360,24 @@ def bucket_signatures(
     """Per-bucket verification signature: (bucket, n_rows, hash_sum,
     hash_xor) — the Merkle level above `hash_diff`'s row level.
 
-    The row hash's first 8 hex chars become a 32-bit value combined with
-    the two cheapest order-independent, partial-aggregable reductions
-    (sum and xor). Either alone is forgeable by accident (xor cancels
-    duplicate pairs, sum is robust to neither reorder nor offset trades
-    but collides on swapped deltas); together with the row count the
-    signature detects any single-row difference and any realistic
-    multi-row corruption. One scan, map-side combine, and the shuffle
-    carries `n_buckets` rows — not the table.
+    Each row's 32-bit value is the row hash's first 8 hex chars XOR hex
+    chars 9-16 of its key's sha256 (the same digest whose first 8 chars
+    pick the bucket), so a key renamed inside its bucket, or two keys
+    trading content, changes the signature; a NULL row hash counts as 0.
+    The values are combined with the two cheapest order-independent,
+    partial-aggregable reductions (sum and xor). Either alone is forgeable
+    by accident (xor cancels duplicate pairs, sum collides on swapped
+    deltas); together with the row count the signature detects any
+    single-row difference and any realistic multi-row corruption. One
+    scan, map-side combine, and the shuffle carries `n_buckets` rows — not
+    the table.
 
     hash_sum stays inside a long for < 2^31 rows per bucket (32-bit terms);
     size `n_buckets` so buckets stay under that (at 10^10 rows and the
     default 1024 buckets: ~10^7 rows/bucket — 4 orders of headroom).
     """
-    h32 = F.conv(F.substring(hash_col, 1, 8), 16, 10).cast("long")
+    h32 = F.coalesce(_hex32(hash_col, 1), F.lit(0)).bitwiseXOR(
+        _hex32(_key_sha(key_cols, salt), 9))
     return (
         df.select(
             key_bucket(key_cols, n_buckets, salt).alias("bucket"),

@@ -419,7 +419,7 @@ class SnapshotTable:
             out_schema = T.StructType(
                 [f for f in out_schema.fields if f.name in need])
         out_cols = [f.name for f in out_schema.fields]
-        need_gen = has_delta or with_gen
+        need_gen = (has_delta and reduce) or with_gen
         parts: list[DataFrame] = []
         for d, bs in sorted(dir_buckets.items()):
             phys = self._dir_schema(d)
@@ -430,16 +430,25 @@ class SnapshotTable:
             if not paths:
                 continue
             df = self.spark.read.schema(phys).parquet(*paths)
+            # no cast, alias or projection that changes nothing: each one
+            # built here is driver time paid per dir on every read
             sel = []
-            phys_current = {self._resolve_name(f.name, snap.renames): f.name for f in phys.fields}
+            phys_current = {self._resolve_name(f.name, snap.renames): f
+                            for f in phys.fields}
             for f in out_schema.fields:
-                if f.name in phys_current:
-                    sel.append(F.col(phys_current[f.name]).cast(f.dataType).alias(f.name))
-                else:
+                pf = phys_current.get(f.name)
+                if pf is None:  # added after this dir was written
                     sel.append(F.lit(None).cast(f.dataType).alias(f.name))
+                elif pf.dataType != f.dataType:  # widened
+                    sel.append(F.col(pf.name).cast(f.dataType).alias(f.name))
+                elif pf.name != f.name:  # renamed
+                    sel.append(F.col(pf.name).alias(f.name))
+                else:
+                    sel.append(f.name)
             if need_gen:
                 sel.append(F.lit(dir_gen(d)).alias(GEN_COL))
-            parts.append(df.select(*sel))
+            identity = all(isinstance(c, str) for c in sel) and sel == phys.names
+            parts.append(df if identity else df.select(*sel))
         if not parts:
             read_schema = out_schema
             if need_gen:
@@ -464,8 +473,6 @@ class SnapshotTable:
                 F.struct(F.col(lsn_col), F.col(GEN_COL)),
             ).alias("_w")
             df = df.groupBy(*snap.key_cols).agg(winner).select("_w.*")
-        elif need_gen and not with_gen:
-            df = df.drop(GEN_COL)
         if not reduce:
             return df.withColumn(
                 BUCKET_COL, bucket_expr(snap.layout_cols(), snap.n_buckets)

@@ -111,6 +111,14 @@ PARITY = {
              more=False,
              count_by_group=[{"repo": "r3", "src_rows": 1, "tgt_rows": 0,
                               "count_ok": False}])),
+    # NULL content on a key of one side only, balanced by one on the other
+    # side: both join rows are OK and the side counts agree, but no key
+    # has a partner
+    "null_content_one_sided_keys": (
+        [("r1", "a", "py", None)], [("r1", "b", "py", None)], {},
+        dict(consistent=False, source_rows=1, target_rows=1, n_mismatch=0,
+             n_missing_in_target=0, n_missing_in_source=0, report=[],
+             more=False, count_by_group=[])),
     "report_cap_overflow": (
         BASE, [(r, p, lang, c + "!") for r, p, lang, c in BASE],
         {"report_cap": 2},
@@ -187,3 +195,32 @@ def test_hierarchical_row_counts_from_signatures(spark):
     assert not res.consistent and res.n_missing_in_target == 1
     same = verify_hierarchical(src, src, KEYS, n_buckets=16)
     assert same.consistent and same.source_rows == same.target_rows == 4
+
+
+def _same_bucket_paths(n_buckets=1024, salt="vbucket"):
+    """Two paths of repo r1 in one verification bucket (`key_bucket`)."""
+    seen = {}
+    for i in range(10 * n_buckets):
+        digest = hashlib.sha256(f"{salt}:r1:{i}".encode()).hexdigest()
+        b = int(digest[:8], 16) % n_buckets
+        if b in seen:
+            return seen[b], str(i)
+        seen[b] = str(i)
+
+
+def test_hierarchical_sees_key_changes_inside_a_bucket(spark):
+    """The bucket signature covers the key: a key renamed to another key
+    of its bucket with the same content, and two keys of one bucket
+    trading content, are both differences."""
+    p, q = _same_bucket_paths()
+    src = _df(spark, [("r1", p, "py", "x"), ("r2", "c", "go", "z")])
+    renamed = _df(spark, [("r1", q, "py", "x"), ("r2", "c", "go", "z")])
+    res = verify_hierarchical(src, renamed, KEYS)
+    assert not res.consistent and len(res.extra["dirty_buckets"]) == 1
+    assert (res.n_missing_in_target, res.n_missing_in_source) == (1, 1)
+
+    pair = _df(spark, [("r1", p, "py", "x"), ("r1", q, "py", "y")])
+    swapped = _df(spark, [("r1", p, "py", "y"), ("r1", q, "py", "x")])
+    res = verify_hierarchical(pair, swapped, KEYS)
+    assert not res.consistent and res.n_mismatch == 2
+    assert verify_hierarchical(pair, pair, KEYS).consistent
