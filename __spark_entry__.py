@@ -352,14 +352,9 @@ FROM (
 """
 
 
-def _group_sql_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plain SQL over EngineGroup views, routed bucket-aligned (round-5:
-    tables/sql_route.py): the user writes an ordinary equi-join between
-    the source table and its co-located chunk table and gets the
-    shuffle-free per-bucket plan automatically — `aligned="require"`
-    proves the routing engaged rather than silently falling back to the
-    shuffled view join. Oracle: the same per-repo aggregate over the
-    chunk transform of the LWW final state."""
+def _chunk_group(spark: SparkSession, sf_dir: str, prefix: str):
+    """EngineGroup of the source table and its co-located chunk table,
+    both compacted: the setup of the two group_sql_* queries."""
     from data_migration_service_spark.api import EngineGroup
     from data_migration_service_spark.operators.merge import compact
     from data_migration_service_spark.tables.derived import DerivedTable
@@ -373,7 +368,7 @@ def _group_sql_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("lsn", T.LongType(), False),
         ]
     )
-    root = tempfile.mkdtemp(prefix="dms_gsql_")
+    root = tempfile.mkdtemp(prefix=prefix)
     t = SnapshotTable.create(spark, os.path.join(root, "repos"), schema,
                              ["repo", "path"], 16)
     cfg = EngineConfig(table_path=os.path.join(root, "repos"), n_buckets=16,
@@ -384,18 +379,24 @@ def _group_sql_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
     d.sync(t)
     compact(t, cfg)
     d.compact()
-    group = EngineGroup(spark, {
+    return EngineGroup(spark, {
         "repos": cfg,
         "chunks": EngineConfig(table_path=os.path.join(root, "chunks"),
                                n_buckets=16, merge_mode="mor"),
     })
-    return group.sql(
-        "SELECT a.repo, count(1) AS n_chunks, "
-        "sum(length(b.chunk_text)) AS n_chars "
-        "FROM repos a JOIN chunks b ON a.repo = b.repo AND a.path = b.path "
-        "GROUP BY a.repo",
-        aligned="require",
-    )
+
+
+def _group_sql_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-repo chunk counts over the EngineGroup's bucket-aligned join:
+    `group.colocated_join_many(["repos", "chunks"])` inner-joins the
+    source table with its co-located chunk table on the shared
+    (repo, path) layout with no join exchange, then a DataFrame
+    groupBy/agg counts chunks and characters per repo. Oracle: the same
+    per-repo aggregate over the chunk transform of the LWW final state."""
+    group = _chunk_group(spark, sf_dir, "dms_gsql_")
+    return group.colocated_join_many(["repos", "chunks"]).groupBy(
+        "repo").agg(F.count(F.lit(1)).alias("n_chunks"),
+                    F.sum(F.length("chunk_text")).alias("n_chars"))
 
 
 _GROUP_SQL_ALIGNED_SQL = _DERIVED_CHANGES_SQL + """
@@ -420,47 +421,17 @@ GROUP BY repo
 
 
 def _group_sql_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT JOIN + USING through the aligned SQL router (round-5 envelope
-    extension): docs with no chunk rows (empty content) must survive
-    NULL-padded, and USING makes the bare key references legal — both
-    routed shuffle-free with `aligned="require"`. Oracle: the same LEFT
-    JOIN over the chunk transform of the LWW final state."""
-    from data_migration_service_spark.api import EngineGroup
-    from data_migration_service_spark.operators.merge import compact
-    from data_migration_service_spark.tables.derived import DerivedTable
-
-    ch = _derived_changes(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("repo", T.StringType(), False),
-            T.StructField("path", T.StringType(), False),
-            T.StructField("content", T.StringType(), True),
-            T.StructField("lsn", T.LongType(), False),
-        ]
-    )
-    root = tempfile.mkdtemp(prefix="dms_gsqll_")
-    t = SnapshotTable.create(spark, os.path.join(root, "repos"), schema,
-                             ["repo", "path"], 16)
-    cfg = EngineConfig(table_path=os.path.join(root, "repos"), n_buckets=16,
-                       salt_factor=1, merge_mode="mor")
-    d = DerivedTable.create(spark, os.path.join(root, "chunks"), t,
-                            _CHUNK_TRANSFORM_SQL, seq_col="seq")
-    cdc_apply(t, ch, cfg, epoch=0)
-    d.sync(t)
-    compact(t, cfg)
-    d.compact()
-    group = EngineGroup(spark, {
-        "repos": cfg,
-        "chunks": EngineConfig(table_path=os.path.join(root, "chunks"),
-                               n_buckets=16, merge_mode="mor"),
-    })
-    return group.sql(
-        "SELECT repo, count(1) AS n_rows, "
-        "CAST(sum(CASE WHEN chunk_text IS NULL THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS n_unmatched "
-        "FROM repos LEFT JOIN chunks USING (repo, path) GROUP BY repo",
-        aligned="require",
-    )
+    """LEFT variant of group_sql_aligned: `colocated_join_many(...,
+    how="left")` keeps every source doc, so docs with no chunk rows
+    (empty content) survive NULL-padded and are counted per repo as
+    unmatched. Oracle: the same LEFT JOIN ... USING (repo, path) over the
+    chunk transform of the LWW final state."""
+    group = _chunk_group(spark, sf_dir, "dms_gsqll_")
+    return group.colocated_join_many(["repos", "chunks"], how="left").groupBy(
+        "repo").agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("chunk_text").isNull().cast("bigint"))
+            .alias("n_unmatched"))
 
 
 _GROUP_SQL_LEFT_SQL = _DERIVED_CHANGES_SQL + """
@@ -3129,9 +3100,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     (b) the four round-3 hash failures fixed in round 4 (merge_upsert,
     pack_offsets, cube_doc_stats, debezium_roundtrip) stay in for one
     confirming round; (c) the remaining slots hold the new round-5 query
-    (group_sql_aligned — plain SQL routed through the bucket-aligned
-    planner) plus the headline paths adjacent to this round's code
-    changes (colocated/lake, streaming windows value contract, CDC
+    (group_sql_aligned — a per-repo aggregate over the group's
+    bucket-aligned join) plus the headline paths adjacent to this round's
+    code changes (colocated/lake, streaming windows value contract, CDC
     apply). Round-4-green entries whose code paths did not change sit
     just past the window."""
     return {
@@ -3186,7 +3157,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_offsets": q_pack_offsets,
         "cube_doc_stats": q_cube_doc_stats,
         "debezium_roundtrip": q_debezium_roundtrip,
-        # --- new in round 5: SQL routed through the aligned planner ---
+        # --- new in round 5: aggregate over the group's aligned join ---
         "group_sql_aligned": _group_sql_aligned,
         # --- headline paths adjacent to this round's code changes ---
         "cdc_replay_final_state": _replay_final_state,

@@ -23,6 +23,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -215,14 +216,17 @@ def run_replay(spark, n_events: int, n_epochs: int, salt_factor: int,
         shutil.rmtree(root, ignore_errors=True)
 
 
-def run_group_bench(spark, n_events: int, n_epochs: int = 2) -> dict:
+def run_group_bench(spark, n_events: int, n_epochs: int = 2,
+                    reps: int = 3) -> dict:
     """EngineGroup multi-table scenario (round-4 verdict item 6): one CDC
     source table plus a co-located derived chunk table, replayed epoch by
     epoch (apply + derived sync per epoch — the group sweep shape), then
-    read back through plain SQL over the group views, which the round-5
-    router plans as ONE bucket-aligned pass (zero join exchanges).
-    Reports the replay wall, the aligned-join read wall, and the naive
-    (aligned="off") read wall for the same query as the plan-gap number.
+    one per-repo aggregate over the chunk join read back two ways: the
+    bucket-aligned join (`EngineGroup.colocated_join_many` + `groupBy`,
+    zero join exchanges) and plain SQL over the group views
+    (`EngineGroup.sql`, Spark's own plan). Each read runs `reps` times,
+    alternating which goes first; the medians and every rep are reported,
+    and the two answers must agree.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -291,25 +295,36 @@ LATERAL VIEW explode(
              "sum(length(b.chunk_text)) AS n_chars "
              "FROM repos a JOIN chunks b "
              "ON a.repo = b.repo AND a.path = b.path GROUP BY a.repo")
-        t1 = time.monotonic()
-        aligned = group.sql(q, aligned="require")
-        _force(aligned)
-        aligned_sec = time.monotonic() - t1
+        reads = {
+            "aligned": lambda: group.colocated_join_many(
+                ["repos", "chunks"]).groupBy("repo").agg(
+                    F.count(F.lit(1)).alias("n_chunks"),
+                    F.sum(F.length("chunk_text")).alias("n_chars")),
+            "naive": lambda: group.sql(q),
+        }
+        walls: dict[str, list[float]] = {k: [] for k in reads}
+        for r in range(max(reps, 1)):
+            for name in (list(reads) if r % 2 == 0 else list(reads)[::-1]):
+                t1 = time.monotonic()
+                _force(reads[name]())
+                walls[name].append(round(time.monotonic() - t1, 3))
+        aligned, naive = reads["aligned"](), reads["naive"]()
         plan = aligned._jdf.queryExecution().executedPlan().toString()
         # the aggregate pays one exchange; the join must pay none
         exchange_free_join = plan.count("Exchange hashpartitioning") <= 1
-
-        t2 = time.monotonic()
-        _force(group.sql(q, aligned="off"))
-        naive_sec = time.monotonic() - t2
+        rows = sorted(map(tuple, aligned.collect()))
+        if rows != sorted(map(tuple, naive.collect())):
+            raise AssertionError("aligned and naive group reads differ")
         return {
             "n_events": n_events,
             "n_epochs": n_epochs,
             "group_replay_sec": round(replay_sec, 3),
-            "aligned_join_sec": round(aligned_sec, 3),
-            "naive_join_sec": round(naive_sec, 3),
+            "aligned_join_sec": round(statistics.median(walls["aligned"]), 3),
+            "naive_join_sec": round(statistics.median(walls["naive"]), 3),
+            "aligned_join_reps": walls["aligned"],
+            "naive_join_reps": walls["naive"],
             "aligned_join_exchange_free": exchange_free_join,
-            "result_rows": aligned.count(),
+            "result_rows": len(rows),
         }
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -376,7 +391,8 @@ def main() -> int:
                          "identical input at every level)")
     ap.add_argument("--reps", type=int, default=3,
                     help="repeat the replay, report the best (host-noise "
-                         "guard; per-epoch times of every rep are kept)")
+                         "guard; per-epoch times of every rep are kept); "
+                         "with --group-bench, repeat each group read")
     ap.add_argument("--compact-threshold", type=int, default=None,
                     help="delta dirs before folding (default: n_epochs = "
                          "one amortized compaction per run; sustained "
@@ -384,7 +400,8 @@ def main() -> int:
                          "maintenance)")
     ap.add_argument("--group-bench", action="store_true",
                     help="run the EngineGroup multi-table scenario "
-                         "(co-located replay + aligned SQL join read) "
+                         "(co-located replay + aligned vs plain-SQL join "
+                         "read) "
                          "instead of the standard suite")
     ap.add_argument("--verify", action="store_true",
                     help="time apply + sha256 final-state verification "
@@ -420,7 +437,8 @@ def main() -> int:
     spark = get_spark(app_name="dms-bench", master=master)
     try:
         if args.group_bench:
-            g = run_group_bench(spark, n_events, n_epochs=args.epochs)
+            g = run_group_bench(spark, n_events, n_epochs=args.epochs,
+                                reps=args.reps)
             print(json.dumps({
                 "metric": "group_replay_aligned_join_wall",
                 "value": round(g["group_replay_sec"]

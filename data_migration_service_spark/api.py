@@ -1131,28 +1131,22 @@ class EngineGroup:
         transient — the returned DataFrame's plan is already resolved, and
         the views are dropped before returning.
 
-        Aligned-join routing (`aligned`, round-4 verdict item 1):
-        Catalyst cannot see the engine's bucket layout through parquet-dir
-        views, so a naive equi-join between co-located group tables pays
-        one shuffle exchange per side even though none is needed. When
-        `aligned="auto"` (the default) and the query is an inner or LEFT
-        equi-join chain over co-located group tables whose keys cover the
-        shared layout columns, the join is planned through
-        `colocated_join_many` instead — zero exchanges on compacted
-        tables — and the query's remaining clauses run over that result
-        (`tables/sql_route.py` documents the exact routable envelope;
-        `tables/colocated.collision_renames` the `_rK` collision renames). Queries outside the envelope
-        fall back to the naive plan unchanged. `aligned="require"` raises
-        ValueError with the precise refusal reason instead of falling
-        back — the lever for callers who must not ship a shuffled plan
-        silently; `aligned="off"` disables routing. The explicit escape
-        hatch remains: `group.colocated_join_many([a, b, ...], on=...)`.
-        Pinned by tests/test_sql_route.py (zero Exchange on a plain SQL
-        join, equality with the aligned="off" plan) and
-        tests/test_colocated.py."""
+        This is Spark's own plan: Catalyst cannot see the engine's bucket
+        layout through the views, so an equi-join between co-located
+        tables shuffles both sides. The shuffle-free plan is the explicit
+        `colocated_join_many([a, b, ...], on=..., how=...)`. `aligned` is
+        kept for callers that name it: "auto" and "off" both run the plain
+        plan, and "require" raises ValueError pointing at
+        `colocated_join_many`. Pinned by
+        tests/test_api.py::test_group_sql_is_plain_spark_sql."""
         if aligned not in ("auto", "require", "off"):
             raise ValueError(
                 f"aligned must be auto, require or off, got {aligned!r}")
+        if aligned == "require":
+            raise ValueError(
+                "EngineGroup.sql runs Spark's plan over the group views; "
+                "use EngineGroup.colocated_join_many for a shuffle-free "
+                "bucket-aligned join")
         pins: dict[str, int] = {}
         if catalog_root is not None:
             from data_migration_service_spark.tables.txn import (
@@ -1160,22 +1154,6 @@ class EngineGroup:
             )
 
             pins = consistent_snapshots(catalog_root)
-        if aligned != "off":
-            from data_migration_service_spark.tables.sql_route import (
-                Unroutable,
-                route_aligned_sql,
-            )
-
-            try:
-                return route_aligned_sql(self.spark, self.engines, query,
-                                         pins)
-            except Unroutable as e:
-                if aligned == "require":
-                    raise ValueError(
-                        f"aligned='require' but the query is not "
-                        f"routable: {e.args[0]}") from e
-                logger.debug("aligned-join routing fell back to the "
-                             "naive plan: %s", e.args[0])
         with _VIEW_LOCK:
             try:
                 for name, eng in self.engines.items():

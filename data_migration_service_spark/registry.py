@@ -134,9 +134,11 @@ def resolve_batch(
 
     One `from_json` per version present (JVM expression, no Python), then the
     union aligns everything to the target version's column set; columns a
-    version doesn't know yet come out NULL. `versions`: the distinct
-    `schema_version` values of `raw` when the caller already collected
-    them (default: one distinct-collect here).
+    version doesn't know yet come out NULL. A field is cast only where its
+    version declares another type than the target, and aliased only where
+    it was renamed or cast. `versions`: the distinct `schema_version` values
+    of `raw` when the caller already collected them (default: one
+    distinct-collect here).
     """
     target = registry.get(to_version) if to_version else registry.latest()
     if versions is None:
@@ -151,14 +153,20 @@ def resolve_batch(
         part = raw.where(F.col("schema_version") == ver)
         parsed = part.withColumn("_p", F.from_json(F.col(payload_col), sv.struct()))
         sel = [F.col(c) for c in envelope_cols]
-        have = {registry.current_name(n, ver, target.version): n for n, _ in sv.columns}
+        have = {registry.current_name(n, ver, target.version): (n, t)
+                for n, t in sv.columns}
         for name, typ in target.columns:
             if name in envelope_cols:
                 continue
-            if name in have:
-                sel.append(F.col(f"_p.{have[name]}").cast(_TYPE[typ]).alias(name))
-            else:
+            if name not in have:
                 sel.append(F.lit(None).cast(_TYPE[typ]).alias(name))
+                continue
+            src, src_typ = have[name]
+            c = F.col(f"_p.{src}")
+            if src_typ != typ:
+                c = c.cast(_TYPE[typ])
+            # a cast renames the column to its expression text
+            sel.append(c if (src, src_typ) == (name, typ) else c.alias(name))
         parts.append(parsed.select(*sel))
     df = parts[0]
     for p in parts[1:]:

@@ -25,8 +25,9 @@ join does, with one read→rename→join fold over 2..N tables and two plans:
   only their own MOR reduce, still bucket-local.
 
 Non-join columns colliding with the joined output so far are renamed
-`{col}_r{k}` (k = table position) by `collision_renames`, the one rule
-the SQL router (tables/sql_route.py) also maps its references through.
+`{col}_r{k}` (k = table position) by `collision_renames`. Plain SQL over
+the group views (`EngineGroup.sql`) is Spark's own shuffled plan; this
+module is the one explicit shuffle-free join.
 
 Scale envelope — explicit, not silent:
 
@@ -122,15 +123,14 @@ def colocated_join_many(
     on: list[str] | None = None,
     how: str = "inner",
     buckets: list[int] | None = None,
-    snapshots: list[Snapshot] | None = None,
 ) -> DataFrame:
     """Bucket-aligned equi-join across 2..N co-located tables, shuffle-free.
 
     Every table must be pairwise bucket-aligned on `on` (defaults to the
     first table's layout columns); raises with the first misalignment
-    reason otherwise — the same contract `EngineGroup.sql` documents for
-    plain-SQL joins over group views (which Catalyst cannot see the
-    manifest layout through, so they pay N-1 exchanges). `how`: "inner"
+    reason otherwise. Plain-SQL joins over the group views
+    (`EngineGroup.sql`) cannot use the layout — Catalyst cannot see the
+    manifest through them — so they pay the exchanges. `how`: "inner"
     (common populated buckets) or "left" (all of the first table's
     populated buckets; right reads of unpopulated buckets are empty).
     Colliding non-join columns are renamed by `collision_renames`.
@@ -138,10 +138,6 @@ def colocated_join_many(
     `buckets` restricts the join to a bucket subset — the pruned-lookup
     composition (probe the keys, join only the hit buckets) and the
     batching lever once a per-bucket join exceeds `MAX_PLAN_BUCKETS`.
-    `snapshots` pins each table to a specific snapshot (positional,
-    len == len(tables)) — `EngineGroup.sql(catalog_root=...)` routes
-    through here with the group-transaction pins so an aligned read is
-    exactly as consistent as the naive view read it replaces.
 
     Broadcast size gate: a right side is broadcast ONLY when its
     estimated IN-MEMORY footprint — compressed on-disk bytes (base +
@@ -160,10 +156,7 @@ def colocated_join_many(
         raise ValueError("colocated_join_many needs at least 2 tables")
     if how not in ("inner", "left"):
         raise ValueError(f"how must be inner or left, got {how!r}")
-    snaps = (list(snapshots) if snapshots is not None
-             else [t.current() for t in tables])
-    if len(snaps) != len(tables):
-        raise ValueError("snapshots must align 1:1 with tables")
+    snaps = [t.current() for t in tables]
     on = list(on) if on is not None else snaps[0].layout_cols()
     for i, s in enumerate(snaps[1:], start=1):
         reason = alignment(snaps[0], s, on)

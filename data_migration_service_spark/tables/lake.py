@@ -348,11 +348,13 @@ class SnapshotTable:
         """Read the table (optionally one snapshot / a bucket subset).
 
         Bucket pruning: only the requested buckets' directories are handed to
-        the scan. Schema evolution: directories are grouped by their physical
-        write-schema; each group is read with that exact schema (so parquet
-        footer pruning still works), old column names are mapped through the
-        rename lineage, and missing (later-added) columns are filled with
-        NULL — the same name-lineage trick Iceberg does with field ids.
+        the scan. Schema evolution: each data directory (base or delta) is
+        one parquet scan with that directory's physical write-schema (so
+        parquet footer pruning still works), and the scans are
+        `unionByName`ed; old column names are mapped through the rename
+        lineage, widened columns are cast, and missing (later-added)
+        columns are filled with NULL — the same name-lineage trick Iceberg
+        does with field ids.
 
         Merge-on-read: if any requested bucket carries delta dirs, base and
         delta rows are reduced to one row per key by max LSN (one hash
@@ -394,8 +396,8 @@ class SnapshotTable:
         """
         snap = snapshot or self.current()
         want = set(buckets) if buckets is not None else None
-        # group (dir -> its buckets) honoring pruning; deltas join the same
-        # scan groups, the LWW reduce below resolves base-vs-delta winners
+        # dir -> its buckets, honoring pruning; one scan per dir, deltas
+        # included, the LWW reduce below resolves base-vs-delta winners
         dir_buckets: dict[str, list[int]] = {}
         has_delta = False
         for b, d in snap.buckets.items():

@@ -1,6 +1,9 @@
 """Engine facade: the reference's REST surface end-to-end (replay ->
 status -> verify -> targeted re-replay -> cleanup)."""
 
+import threading
+from collections import Counter
+
 import pyspark.sql.types as T
 import pytest
 from pyspark.sql import functions as F
@@ -799,6 +802,112 @@ def test_engine_group_sql_pinned_consistency(spark, tmp_path):
     # assert the pinned read remains self-consistent
     pins = consistent_snapshots(cat)
     assert set(pins) == {"a", "b"}
+
+
+LANG_SQL = """
+SELECT repo, path, lsn, CAST(0 AS BIGINT) AS seq,
+       concat(upper(coalesce(lang, '')), '!') AS Lang
+FROM __source__
+"""
+
+
+@pytest.fixture(scope="module")
+def sql_group(spark, tmp_path_factory):
+    """Three small uncompacted tables for the group SQL tests: the
+    source, its chunk table, and one row per live doc whose `Lang`
+    differs from the source's `lang` only in case."""
+    from data_migration_service_spark.operators.merge import cdc_apply
+    from data_migration_service_spark.tables.derived import DerivedTable
+    from tests.test_colocated import CHUNK_SQL
+
+    tmp = tmp_path_factory.mktemp("group_sql")
+    t = SnapshotTable.create(spark, str(tmp / "repos"), TABLE_SCHEMA,
+                             ["repo", "path"], 4)
+    cfg = EngineConfig(table_path=str(tmp / "repos"), n_buckets=4,
+                       merge_mode="mor")
+    cdc_apply(t, gen_changes(spark, 300, n_repos=4, n_paths_per_repo=10),
+              cfg, epoch=0)
+    cfgs = {"repos": cfg}
+    for name, transform in (("chunks", CHUNK_SQL), ("langs", LANG_SQL)):
+        DerivedTable.create(spark, str(tmp / name), t, transform).sync(t)
+        cfgs[name] = EngineConfig(table_path=str(tmp / name),
+                                  merge_mode="mor")
+    return EngineGroup(spark, cfgs)
+
+
+def test_group_sql_is_plain_spark_sql(spark, sql_group):
+    """EngineGroup.sql is spark.sql over the group's views: the same
+    column names (a collided `lsn` stays `lsn` on both sides) and the
+    same rows, for every aligned value but "require", which refuses and
+    names the explicit shuffle-free join."""
+    queries = [
+        "SELECT a.lsn, b.lsn FROM repos a JOIN chunks b "
+        "ON a.repo = b.repo AND a.path = b.path",
+        "SELECT repo, path, content, chunk_text "
+        "FROM repos LEFT JOIN chunks USING (repo, path)",
+        "SELECT a.repo, a.lang, b.Lang FROM repos a JOIN langs b "
+        "ON a.repo = b.repo AND a.path = b.path",
+        "SELECT a.repo, b.chunk_text FROM repos a RIGHT JOIN chunks b "
+        "ON a.repo = b.repo AND a.path = b.path",
+    ]
+    for q in queries:
+        got = [sql_group.sql(q), sql_group.sql(q, aligned="off")]
+        try:
+            for name, eng in sql_group.engines.items():
+                eng.table.read().createOrReplaceTempView(name)
+            want = spark.sql(q)
+            rows = Counter(map(tuple, want.collect()))
+        finally:
+            for name in sql_group.engines:
+                spark.catalog.dropTempView(name)
+        assert rows, q
+        for df in got:
+            assert df.columns == want.columns, q
+            assert Counter(map(tuple, df.collect())) == rows, q
+    with pytest.raises(ValueError, match="colocated_join_many"):
+        sql_group.sql(queries[0], aligned="require")
+    with pytest.raises(ValueError, match="aligned must be"):
+        sql_group.sql(queries[0], aligned="on")
+
+
+def test_concurrent_naive_sql_keeps_its_views(spark, sql_group):
+    """EngineGroup.sql registers views under the group's table names; two
+    threads running different queries on one session must not drop or
+    replace each other's views mid-query."""
+    queries = [
+        "SELECT count(*) AS n FROM repos",
+        "SELECT lang, count(*) AS n FROM repos GROUP BY lang",
+        "SELECT repo, count(*) AS n FROM chunks GROUP BY repo",
+        "SELECT Lang, count(*) AS n FROM langs GROUP BY Lang",
+        "SELECT a.repo, count(*) AS n FROM repos a JOIN chunks b "
+        "ON a.repo = b.repo AND a.path = b.path GROUP BY a.repo",
+        "SELECT b.Lang, max(a.lsn) AS hi FROM repos a JOIN langs b "
+        "ON a.repo = b.repo AND a.path = b.path GROUP BY b.Lang",
+    ]
+    want = [Counter(map(tuple, sql_group.sql(q).collect()))
+            for q in queries]
+    errors: list[Exception] = []
+    start = threading.Barrier(2)
+
+    def worker(order: list[int]) -> None:
+        try:
+            start.wait(timeout=60)
+            for i in order:
+                got = sql_group.sql(queries[i]).collect()
+                assert Counter(map(tuple, got)) == want[i], queries[i]
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    orders = [list(range(6)), list(range(5, -1, -1))]
+    threads = [threading.Thread(target=worker, args=(o,)) for o in orders]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=600)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    assert not {"repos", "chunks", "langs"} & {
+        t.name for t in spark.catalog.listTables()}
 
 
 def test_backfill_column_via_add_then_update(spark, tmp_path):

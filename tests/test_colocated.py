@@ -12,6 +12,7 @@ from data_migration_service_spark.operators.merge import cdc_apply, compact
 from data_migration_service_spark.tables import colocated
 from data_migration_service_spark.tables.colocated import (
     alignment,
+    collision_renames,
     colocated_join_many,
 )
 from data_migration_service_spark.tables.derived import DerivedTable
@@ -354,3 +355,32 @@ def test_optimize_preserves_hot_bucket_file_splits(spark, tmp_path):
     assert len(left_files) > 2, left_files
     assert len(right_files) > 2, right_files
     assert j.count() == before_rows > 0
+
+
+def test_collision_renames_positional_suffix():
+    # t0(k, x, lsn), t1(k, x, lsn, y), t2(k, lsn): collisions rename to
+    # _rK positionally; join col never renames
+    ren = collision_renames(
+        [["k", "x", "lsn"], ["k", "x", "lsn", "y"], ["k", "lsn"]], ["k"])
+    assert ren[(0, "lsn")] == "lsn"
+    assert ren[(1, "x")] == "x_r1"
+    assert ren[(1, "lsn")] == "lsn_r1"
+    assert ren[(1, "y")] == "y"
+    assert ren[(2, "lsn")] == "lsn_r2"
+    assert ren[(1, "k")] == "k" and ren[(2, "k")] == "k"
+
+
+def test_collision_renames_cascaded_collision():
+    # a later table whose column collides with an EARLIER rename target
+    # (x_r1) must still get a unique name
+    ren = collision_renames([["k", "x"], ["k", "x"], ["k", "x_r1"]], ["k"])
+    assert ren[(1, "x")] == "x_r1"
+    assert ren[(2, "x_r1")] == "x_r1_r2"
+
+
+def test_collision_renames_case_insensitive():
+    # Spark resolves names case-insensitively: `lang` and `Lang` collide,
+    # and a key spelled in another case is still the key
+    ren = collision_renames([["K", "lang"], ["k", "Lang"]], ["k"])
+    assert ren[(1, "lang")] == "Lang_r1"
+    assert ren[(1, "k")] == "k"

@@ -13,7 +13,11 @@ from data_migration_service_spark.fixtures.cdc import (
     to_raw_events,
 )
 from data_migration_service_spark.functions.hashing import content_sha256
-from data_migration_service_spark.registry import resolve_batch
+from data_migration_service_spark.registry import (
+    SchemaRegistry,
+    SchemaVersion,
+    resolve_batch,
+)
 from data_migration_service_spark.streaming.replay import ReplayEngine
 from data_migration_service_spark.tables.lake import SnapshotTable
 
@@ -75,6 +79,31 @@ def test_resolve_batch_mixed_versions(spark, tmp_path):
     # size_bytes NULL exactly for v1 events
     v1 = joined.where(F.col("schema_version") == 1)
     assert v1.where(F.col("size_bytes").isNotNull()).count() == 0
+
+
+def test_resolve_batch_rename_add_and_type_change(spark):
+    """v2 renames `name` -> `title` and adds `extra`; v3 widens `n` from
+    int to long. Every version lands in v3's names and types, with a cast
+    only where a version's type differs."""
+    reg = SchemaRegistry([
+        SchemaVersion(1, 0, [("name", "string"), ("n", "int")]),
+        SchemaVersion(2, 2, [("title", "string"), ("n", "int"),
+                             ("extra", "string")], {"name": "title"}),
+        SchemaVersion(3, 3, [("title", "string"), ("n", "long"),
+                             ("extra", "string")]),
+    ])
+    raw = spark.createDataFrame(
+        [(1, 1, '{"name": "a", "n": 1}'),
+         (2, 2, '{"title": "b", "n": 2, "extra": "x"}'),
+         (3, 3, '{"title": "c", "n": 3000000000, "extra": "y"}')],
+        "lsn long, schema_version int, payload string")
+    norm = resolve_batch(raw, reg, envelope_cols=("lsn", "schema_version"))
+    assert norm.dtypes == [("lsn", "bigint"), ("schema_version", "int"),
+                           ("title", "string"), ("n", "bigint"),
+                           ("extra", "string")]
+    assert sorted(map(tuple, norm.collect())) == [
+        (1, 1, "a", 1, None), (2, 2, "b", 2, "x"),
+        (3, 3, "c", 3_000_000_000, "y")]
 
 
 def test_batch_mode_replay_with_evolution(spark, tmp_path):
