@@ -601,12 +601,17 @@ class Engine:
         buckets those keys hash into (reference: fetch-specific-records,
         the read half of migrateSpecificRecords).
 
-        The caller's key plan runs ONCE (`merge.probe`): one capped collect
-        yields the hit buckets, the key count, the Bloom hashes and a
-        local relation of the distinct keys, which the read then
-        broadcasts without running the caller's plan again. Within each
-        hit bucket, delta dirs whose key-Bloom sidecar excludes every
-        probed key are skipped at the driver (lake.prune_deltas) — between
+        The caller's key plan runs ONCE (`merge.probe`): one capped
+        collect (no Spark job for a local relation such as a pandas-built
+        frame; one top-K job over every partition of a frame with few
+        partitions, at most PROBE_TOPK_ROWS key rows to the driver; the
+        incremental take otherwise) yields the hit buckets, the key
+        count, the Bloom hashes and a local relation of the distinct
+        keys, which the read then broadcasts without running the caller's
+        plan again. A key set past PROBE_KEY_CAP rows falls back to the
+        distributed distinct. Within each hit bucket, delta dirs whose
+        key-Bloom sidecar excludes every probed key are skipped at the
+        driver (lake.prune_deltas) — between
         compactions that turns an N-delta-dir lookup into ~1 dir. The
         read's `keys=` semi-join runs on the raw base+delta union, below
         the MOR reduce, so only the probed keys' rows are shuffled; it is

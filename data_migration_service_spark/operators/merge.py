@@ -673,14 +673,57 @@ def maybe_broadcast_keys(kdf: DataFrame, n_keys: int) -> DataFrame:
 # pruning — a giant key set reads every delta anyway)
 PROBE_KEY_CAP = 100_000
 
+# The one-job top-K collect of `_probe` takes up to cap + 1 rows from
+# EVERY partition of the key plan before the driver sees the cap crossed,
+# so it runs only while partitions x (cap + 1) stays within this many
+# rows: 9 partitions at the 100k cap, ~80 MB of task results for short
+# (repo, path) keys with their bucket and hashes, under a tenth of the
+# default 1 GiB spark.driver.maxResultSize. Other plans keep Spark's
+# incremental take, which stops at the first partitions that hold
+# cap + 1 rows.
+PROBE_TOPK_ROWS = 1_000_000
+
 
 @dataclass
 class KeyProbe:
-    """What a keyed call needs to know about its key set."""
+    """What a keyed call needs to know about its key set, from one
+    execution of the caller's key plan (`_probe`). Past PROBE_KEY_CAP key
+    rows (duplicates included) `keys` is the distributed distinct and
+    `hashes` is None."""
     keys: DataFrame     # semi-join side, broadcast-gated (maybe_broadcast_keys)
     buckets: list[int]  # hit bucket ids under the probed layout
     n_keys: int         # distinct keys
     hashes: list[tuple[int, int]] | None  # Bloom probe pairs; None past cap
+
+
+def _planned_partitions(df: DataFrame) -> int | None:
+    """An upper bound on the partitions `df` outputs, known without
+    running a job: a declared output partitioning (a shuffle, a range, a
+    coalesce), or, for a plan without exchanges, the sum over its leaves
+    of the partitions a scan of an RDD (`createDataFrame(list)`) or of
+    files lists on the driver. None for a plan with exchanges (adaptive
+    execution settles its partitions at run time) or another leaf."""
+    plan = df._jdf.queryExecution().executedPlan()
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return None
+    leaves = plan.collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        n = leaf.outputPartitioning().numPartitions()
+        if n > 0:
+            total += n
+        elif kind == "RDDScanExec":
+            total += leaf.rdd().getNumPartitions()
+        elif kind in ("FileSourceScanExec", "BatchScanExec"):
+            total += leaf.inputRDD().getNumPartitions()
+        else:
+            return None
+    return total
 
 
 def _probe(keys: DataFrame, key_cols: list[str], n_buckets: int,
@@ -689,8 +732,23 @@ def _probe(keys: DataFrame, key_cols: list[str], n_buckets: int,
     bucket, Bloom hashes), deduplicated on the driver (JVM side, so key
     values keep their exact types), which yields the hit buckets, the key
     count, the hashes and a local relation of the distinct keys, so
-    later semi-joins never run the caller's plan again. Past `cap` rows:
-    the distributed distinct of `probe_keys`, executed by each consumer."""
+    later semi-joins never run the caller's plan again.
+
+    The collect takes one of three forms:
+    - a plan Spark knows to hold at most `cap` rows (a local relation
+      such as a pandas-built frame, a small `range`) is collected whole:
+      its limit folds away, 0 jobs for a local relation (a top-K sort
+      over it would cost three jobs);
+    - a plan of P partitions (`_planned_partitions`) with
+      P x (cap + 1) <= PROBE_TOPK_ROWS is collected by one top-K job,
+      `orderBy(keys).limit(cap + 1)`: every partition runs in the same
+      job and returns at most cap + 1 rows, so at most P x (cap + 1) rows
+      reach the driver before it sees the cap crossed;
+    - any other plan by `limit(cap + 1)`, Spark's incremental take: one
+      job on the first partition, then jobs on up to 4x as many
+      partitions as already scanned, until cap + 1 rows are in.
+    Past `cap` rows: the distributed distinct of `probe_keys`, executed
+    by each consumer."""
     cols = [F.col(c) for c in key_cols]
     sel = keys.select(
         *key_cols,
@@ -698,7 +756,14 @@ def _probe(keys: DataFrame, key_cols: list[str], n_buckets: int,
         F.xxhash64(*cols).alias("_h1"),
         F.xxhash64(*cols, F.lit("bloom2")).alias("_h2"),
     )
-    rows = sel.limit(cap + 1)._jdf.collectAsList()
+    bound = sel._jdf.queryExecution().optimizedPlan().maxRows()
+    if bound.isDefined() and bound.get() <= cap:
+        rows = sel._jdf.collectAsList()
+    else:
+        parts = _planned_partitions(sel)
+        topk = parts is not None and parts * (cap + 1) <= PROBE_TOPK_ROWS
+        capped = sel.orderBy(*key_cols) if topk else sel
+        rows = capped.limit(cap + 1)._jdf.collectAsList()
     if rows.size() > cap:
         kdf = keys.select(*key_cols).distinct()
         hits, n_keys = probe_keys(kdf, key_cols, n_buckets,
