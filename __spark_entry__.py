@@ -300,7 +300,8 @@ FROM (
 def _colocated_chunk_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-free co-located join (tables/colocated.py): the derived
     chunk table buckets by the SOURCE key and inherits its bucket count
-    (round 3), so the chunk⋈document join plans per-bucket with zero
+    (round 3), so the chunk⋈document join passes the alignment check and,
+    with the chunk side under Spark's broadcast threshold, runs with zero
     shuffle exchanges after both sides compact. Returns every chunk with
     its source document's content and LSN. Oracle: the chunk transform
     over the LWW final state, carrying the source columns."""
@@ -390,7 +391,8 @@ def _group_sql_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-repo chunk counts over the EngineGroup's bucket-aligned join:
     `group.colocated_join_many(["repos", "chunks"])` inner-joins the
     source table with its co-located chunk table on the shared
-    (repo, path) layout with no join exchange, then a DataFrame
+    (repo, path) layout (no join exchange while the chunk side is under
+    Spark's broadcast threshold), then a DataFrame
     groupBy/agg counts chunks and characters per repo. Oracle: the same
     per-repo aggregate over the chunk transform of the LWW final state."""
     group = _chunk_group(spark, sf_dir, "dms_gsql_")

@@ -222,11 +222,13 @@ def run_group_bench(spark, n_events: int, n_epochs: int = 2,
     source table plus a co-located derived chunk table, replayed epoch by
     epoch (apply + derived sync per epoch — the group sweep shape), then
     one per-repo aggregate over the chunk join read back two ways: the
-    bucket-aligned join (`EngineGroup.colocated_join_many` + `groupBy`,
-    zero join exchanges) and plain SQL over the group views
-    (`EngineGroup.sql`, Spark's own plan). Each read runs `reps` times,
-    alternating which goes first; the medians and every rep are reported,
-    and the two answers must agree.
+    alignment-checked join (`EngineGroup.colocated_join_many` + `groupBy`)
+    and plain SQL over the group views (`EngineGroup.sql`). Both leave
+    the join strategy to Spark's broadcast threshold;
+    `aligned_join_exchange_free` reports whether the first plan's join
+    paid a hash exchange. Each read runs `reps` times, alternating which
+    goes first; the medians and every rep are reported, and the two
+    answers must agree.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -400,9 +402,9 @@ def main() -> int:
                          "maintenance)")
     ap.add_argument("--group-bench", action="store_true",
                     help="run the EngineGroup multi-table scenario "
-                         "(co-located replay + aligned vs plain-SQL join "
-                         "read) "
-                         "instead of the standard suite")
+                         "(co-located replay + colocated_join_many vs "
+                         "plain-SQL join read) instead of the standard "
+                         "suite")
     ap.add_argument("--verify", action="store_true",
                     help="time apply + sha256 final-state verification "
                          "(the full north-rule metric window)")

@@ -1136,22 +1136,22 @@ class EngineGroup:
         transient — the returned DataFrame's plan is already resolved, and
         the views are dropped before returning.
 
-        This is Spark's own plan: Catalyst cannot see the engine's bucket
-        layout through the views, so an equi-join between co-located
-        tables shuffles both sides. The shuffle-free plan is the explicit
-        `colocated_join_many([a, b, ...], on=..., how=...)`. `aligned` is
-        kept for callers that name it: "auto" and "off" both run the plain
-        plan, and "require" raises ValueError pointing at
-        `colocated_join_many`. Pinned by
+        This is Spark's own plan over the views, and it checks no bucket
+        layout. `colocated_join_many([a, b, ...], on=..., how=...)` joins
+        the same way (Spark's broadcast threshold picks the strategy) but
+        first refuses tables that are not bucket-aligned and renames
+        colliding columns. `aligned` is kept for callers that name it:
+        "auto" and "off" both run the plain plan, and "require" raises
+        ValueError pointing at `colocated_join_many`. Pinned by
         tests/test_api.py::test_group_sql_is_plain_spark_sql."""
         if aligned not in ("auto", "require", "off"):
             raise ValueError(
                 f"aligned must be auto, require or off, got {aligned!r}")
         if aligned == "require":
             raise ValueError(
-                "EngineGroup.sql runs Spark's plan over the group views; "
-                "use EngineGroup.colocated_join_many for a shuffle-free "
-                "bucket-aligned join")
+                "EngineGroup.sql checks no bucket alignment; use "
+                "EngineGroup.colocated_join_many to join bucket-aligned "
+                "tables")
         pins: dict[str, int] = {}
         if catalog_root is not None:
             from data_migration_service_spark.tables.txn import (
@@ -1172,10 +1172,10 @@ class EngineGroup:
                     self.spark.catalog.dropTempView(name)
 
     def colocated_join_many(self, names: list[str], **kw) -> DataFrame:
-        """Bucket-aligned join across N co-located group tables in one
-        pass (tables/colocated.colocated_join_many) — the shuffle-free
-        alternative to an N-way join over the `sql()` views. Raises with
-        the first misalignment reason otherwise."""
+        """Bucket-aligned join across N co-located group tables
+        (tables/colocated.colocated_join_many): refuses misaligned tables
+        with the first reason, renames colliding columns, and leaves the
+        join strategy to Spark's broadcast threshold."""
         from data_migration_service_spark.tables.colocated import (
             colocated_join_many,
         )

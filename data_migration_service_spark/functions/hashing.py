@@ -104,9 +104,3 @@ def content_sha256(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.when(c.isNull(), F.lit(None).cast("string")).otherwise(F.sha2(c, 256))
 
-
-def concat_pk(cols: list[str], sep: str = ",") -> Column:
-    """Composite-PK concatenation (reference joins PK parts with `||','||`,
-    DataVerificationService.java:47,322-326). Prefer multi-column join keys;
-    this exists for report readability."""
-    return F.concat_ws(sep, *[F.col(c) for c in cols])

@@ -384,18 +384,6 @@ def sq_code(vec_col, mins: list[float], maxs: list[float]) -> F.Column:
     )
 
 
-def sq_quantize(df: DataFrame, id_col: str, vec_col: str,
-                mins: list[float], maxs: list[float],
-                code_col: str = "code") -> DataFrame:
-    """Materialize the quantized-code column next to the id — the write-time
-    artifact. At 100 TB the codes (1 byte/dim vs 8 for doubles) are stored
-    as their own narrow table/column; ANN candidate generation scans ONLY
-    codes (8x less IO), and full floats are fetched just for the rerank
-    candidates via a point join."""
-    return df.select(
-        F.col(id_col), sq_code(vec_col, mins, maxs).alias(code_col))
-
-
 def sq_topk(
     df: DataFrame,
     id_col: str,

@@ -341,11 +341,11 @@ class DerivedTable:
         """Derived rows joined back to their source rows, bucket-aligned.
 
         The derived table is bucketed by the SOURCE key prefix (create()),
-        so when its n_buckets matches the source's the join runs
-        shuffle-free (tables/colocated.colocated_join_many): the
-        chunk⋈document read that every RAG/export pipeline ends with costs
-        zero exchanges instead of two full-table shuffles. Source columns
-        keep their names; colliding derived columns get the "_r1" suffix
+        so when its n_buckets matches the source's the two are co-located
+        and pass tables/colocated.colocated_join_many's alignment check.
+        Spark's broadcast threshold picks the join strategy: under it, the
+        chunk⋈document read has no shuffle exchange. Source columns keep
+        their names; colliding derived columns get the "_r1" suffix
         (notably the LSN)."""
         from data_migration_service_spark.tables.colocated import (
             colocated_join_many,

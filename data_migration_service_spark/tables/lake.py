@@ -695,29 +695,6 @@ class SnapshotTable:
             pruned.deltas[b] = keep
         return pruned
 
-    def bucket_bytes_estimate(self, snap: Snapshot, b: int) -> int:
-        """Upper-bound on-disk bytes of one bucket (base files + ALL delta
-        files, pre-reduce) from the filesystem alone — no footer parse, no
-        Spark job. NOTE: this is COMPRESSED size; broadcast OOM risk
-        scales with the decompressed in-memory size, which for text-heavy
-        buckets runs 5-20x larger — callers gating broadcasts must apply
-        an expansion factor (colocated.BROADCAST_EXPANSION does) rather
-        than compare these bytes against a memory limit directly
-        (round-4 advisor finding)."""
-        dirs: list[str] = []
-        if b in snap.buckets:
-            dirs.append(snap.buckets[b])
-        dirs.extend(snap.deltas.get(b, []))
-        total = 0
-        for d in dirs:
-            p = os.path.join(self._datadir, d, f"{BUCKET_COL}={b}")
-            if not os.path.isdir(p):
-                continue
-            for fn in os.listdir(p):
-                if fn.endswith(".parquet"):
-                    total += os.path.getsize(os.path.join(p, fn))
-        return total
-
     def dir_lineage(self, dirname: str, lsn_col: str = "lsn") -> dict[int, dict]:
         """Per-bucket lineage of one data dir from parquet FOOTERS only:
         rows + LSN range per `_bucket=N` partition. Driver-side metadata

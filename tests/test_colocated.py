@@ -3,20 +3,22 @@ a derived table bucketed by its source's key prefix joins its source with
 ZERO shuffle exchanges, and the aligned plan returns exactly what the
 naive shuffled join returns."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
 from data_migration_service_spark.config import EngineConfig
 from data_migration_service_spark.fixtures.cdc import gen_changes
 from data_migration_service_spark.operators.merge import cdc_apply, compact
-from data_migration_service_spark.tables import colocated
 from data_migration_service_spark.tables.colocated import (
     alignment,
     collision_renames,
     colocated_join_many,
 )
 from data_migration_service_spark.tables.derived import DerivedTable
-from tests.test_merge import TABLE_SCHEMA, make_table
+from data_migration_service_spark.tables.lake import bucket_expr
+from tests.test_merge import make_table
 
 CHUNK_SQL = """
 SELECT repo, path, lsn, CAST(chunk_id AS BIGINT) AS seq,
@@ -29,18 +31,28 @@ LATERAL VIEW explode(
 """
 
 
-@pytest.fixture()
-def rig(spark, tmp_path):
-    t = make_table(spark, tmp_path, n_buckets=8)
-    cfg = EngineConfig(table_path=str(tmp_path / "repos"), n_buckets=8,
+def build_rig(spark, root):
+    t = make_table(spark, root, n_buckets=8)
+    cfg = EngineConfig(table_path=str(root / "repos"), n_buckets=8,
                        merge_mode="mor", compact_threshold=100)
     ch = gen_changes(spark, 1500, n_repos=8, n_paths_per_repo=12).cache()
     cdc_apply(t, ch, cfg, epoch=0)
     compact(t, cfg)
-    d = DerivedTable.create(spark, str(tmp_path / "chunks"), t, CHUNK_SQL)
+    d = DerivedTable.create(spark, str(root / "chunks"), t, CHUNK_SQL)
     d.sync(t)
     d.compact()
     return t, d, cfg
+
+
+@pytest.fixture(scope="module")
+def rig(spark, tmp_path_factory):
+    """One source + derived chunk table pair shared by the module's
+    read-only tests (a test that mutates a table builds its own)."""
+    return build_rig(spark, tmp_path_factory.mktemp("rig"))
+
+
+def plan_of(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_derived_inherits_source_layout(rig):
@@ -77,52 +89,36 @@ def test_colocated_join_no_shuffle_and_equals_naive(rig):
     assert b.exceptAll(a).count() == 0
 
 
-def test_colocated_join_left_and_bucket_subset(rig):
+def test_colocated_join_left(rig):
     t, d, _ = rig
     full = colocated_join_many([t, d.table], on=["repo", "path"],
                                how="left")
     # every live source row appears (chunked docs 1:N, empty docs 1:1 null)
     assert (full.select("repo", "path").distinct().count()
             == t.read().select("repo", "path").distinct().count())
-    from data_migration_service_spark.tables.lake import bucket_expr
-
-    sub = colocated_join_many([t, d.table], on=["repo", "path"],
-                              buckets=[0, 1])
-    got = (sub.select(bucket_expr(["repo", "path"], 8).alias("b"))
-           .distinct().collect())
-    assert {r["b"] for r in got} <= {0, 1} and got
 
 
-def test_broadcast_size_gate_falls_back_and_matches(rig, monkeypatch):
-    """Round-3 verdict item: an over-limit right bucket must NOT be
-    force-broadcast. With the gate forced to 0 bytes every bucket-pair
-    takes the shuffled fallback (no broadcast hint survives into the
-    plan), and the result is identical to the broadcast-hinted plan."""
+def test_broadcast_is_spark_threshold_choice(rig):
+    """The join carries no forced broadcast hint: with Spark's
+    autoBroadcastJoinThreshold off the plan has no BroadcastHashJoin, and
+    its rows equal those of the default (broadcast) plan."""
     t, d, _ = rig
     spark = t.spark
+    default = colocated_join_many([t, d.table], on=["repo", "path"])
+    assert "BroadcastHashJoin" in plan_of(default)
+    cols = sorted(default.columns)
+    # rows are collected under the conf each plan was built for
+    want = Counter(map(tuple, default.select(*cols).collect()))
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        # rule out Catalyst choosing broadcast on its own size estimate —
-        # the gate's job is only to stop the FORCED hint
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        hinted = colocated_join_many([t, d.table], on=["repo", "path"])
-        monkeypatch.setattr(colocated, "BROADCAST_BYTES_LIMIT", 0)
-        gated = colocated_join_many([t, d.table], on=["repo", "path"])
-        hplan = hinted._jdf.queryExecution().executedPlan().toString()
-        gplan = gated._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in hplan, hplan[:4000]
-        assert "BroadcastHashJoin" not in gplan, gplan[:4000]
+        shuffled = colocated_join_many([t, d.table], on=["repo", "path"])
+        splan = plan_of(shuffled)
+        assert "BroadcastHashJoin" not in splan, splan[:4000]
+        got = Counter(map(tuple, shuffled.select(*cols).collect()))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    cols = sorted(hinted.columns)
-    a, b = hinted.select(*cols), gated.select(*cols)
-    assert a.count() == b.count() > 0
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    # sanity on the estimator the gate reads: real bytes on populated buckets
-    snap = d.table.current()
-    assert sum(d.table.bucket_bytes_estimate(snap, b)
-               for b in range(snap.n_buckets)) > 0
+    assert got == want and sum(want.values()) > 0
 
 
 def test_misalignment_raises(spark, tmp_path, rig):
@@ -132,29 +128,6 @@ def test_misalignment_raises(spark, tmp_path, rig):
         colocated_join_many([t, other], on=["repo", "path"])
     with pytest.raises(ValueError, match="do not cover"):
         colocated_join_many([t, d.table], on=["repo"])
-
-
-def test_bucket_cap_applies_to_per_bucket_plan_only(rig, monkeypatch):
-    """MAX_PLAN_BUCKETS bounds the per-bucket plan only: the whole-table
-    broadcast plan builds no per-bucket join trees, so a small table with
-    more populated buckets than the cap still joins; forcing the
-    per-bucket plan (buckets=, or a broadcast gate of 0) still raises."""
-    t, d, _ = rig
-    monkeypatch.setattr(colocated, "MAX_PLAN_BUCKETS", 2)
-    assert len(colocated._populated(t.current())) > 2
-    j = colocated_join_many([t, d.table], on=["repo", "path"])
-    # the rolling pass the cap asks for returns the same rows
-    batched = sum(
-        colocated_join_many([t, d.table], on=["repo", "path"],
-                            buckets=[b, b + 1]).count()
-        for b in range(0, 8, 2))
-    assert j.count() == batched > 0
-    with pytest.raises(ValueError, match="MAX_PLAN_BUCKETS"):
-        colocated_join_many([t, d.table], on=["repo", "path"],
-                            buckets=[0, 1, 2])
-    monkeypatch.setattr(colocated, "BROADCAST_BYTES_LIMIT", 0)
-    with pytest.raises(ValueError, match="MAX_PLAN_BUCKETS"):
-        colocated_join_many([t, d.table], on=["repo", "path"])
 
 
 def test_join_source_facade(rig):
@@ -173,11 +146,11 @@ def test_join_source_facade(rig):
     assert bad.count() == 0
 
 
-def test_bucket_cols_survive_lifecycle(rig, tmp_path):
+def test_bucket_cols_survive_lifecycle(spark, tmp_path):
     """The layout transform is part of the table's identity: rebucket,
     commit, rollback, and clone all carry bucket_cols; rebucketing the
     derived table to the source's count restores alignment."""
-    t, d, _ = rig
+    t, d, _ = build_rig(spark, tmp_path)
     dt = d.table
     assert dt.current().bucket_cols == ["repo", "path"]
     dt.rebucket(16, salt_factor=1)
@@ -196,7 +169,7 @@ def test_bucket_cols_survive_lifecycle(rig, tmp_path):
     assert clone.current().bucket_cols == ["repo", "path"]
 
 
-def test_engine_group_colocated_join(spark, rig, tmp_path):
+def test_engine_group_colocated_join(spark, rig):
     """EngineGroup facade: two group tables sharing layout join aligned;
     unknown names and misaligned pairs fail loudly."""
     from data_migration_service_spark.api import EngineGroup
@@ -204,8 +177,7 @@ def test_engine_group_colocated_join(spark, rig, tmp_path):
     t, d, cfg = rig
     group = EngineGroup(spark, {
         "repos": cfg,
-        "chunks": EngineConfig(table_path=str(tmp_path / "chunks"),
-                               merge_mode="mor"),
+        "chunks": EngineConfig(table_path=d.table.root, merge_mode="mor"),
     })
     j = group.colocated_join_many(["repos", "chunks"], on=["repo", "path"])
     plan = j._jdf.queryExecution().executedPlan().toString()
@@ -254,8 +226,7 @@ def test_colocated_join_many_three_tables(spark, rig, tmp_path):
     # group facade routes by name, and misalignment still fails loudly
     group = EngineGroup(spark, {
         "repos": cfg,
-        "chunks": EngineConfig(table_path=str(tmp_path / "chunks"),
-                               merge_mode="mor"),
+        "chunks": EngineConfig(table_path=d.table.root, merge_mode="mor"),
         "stats": EngineConfig(table_path=str(tmp_path / "stats"),
                               merge_mode="mor"),
     })
@@ -267,46 +238,58 @@ def test_colocated_join_many_three_tables(spark, rig, tmp_path):
         colocated_join_many([t, other], on=["repo", "path"])
 
 
-def test_hot_bucket_pair_parallelizes_by_file_splits(spark, tmp_path):
-    """Round-4 verdict item 8 (skew x colocated): an aligned join has no
-    shuffle to salt, so a bucket holding half the table must get its
-    parallelism from FILE-level splits instead. With target_file_rows
-    rolling the writer, the hot bucket's side of the join reads many
-    files (= many scan tasks), the plan stays exchange-free, and the
-    result equals the naive shuffled join on the same bucket."""
-    import pathlib
-
-    t = make_table(spark, tmp_path, n_buckets=4)
+def build_hot_rig(spark, root):
+    """4-bucket source + chunk tables whose writers roll a file every 100
+    rows, so every bucket (the hot one included) spans several files."""
+    t = make_table(spark, root, n_buckets=4)
     t.set_props(target_file_rows="100")
-    cfg = EngineConfig(table_path=str(tmp_path / "repos"), n_buckets=4,
+    cfg = EngineConfig(table_path=str(root / "repos"), n_buckets=4,
                        merge_mode="mor", compact_threshold=1)
     ch = gen_changes(spark, 2000, n_repos=6, n_paths_per_repo=120).cache()
     cdc_apply(t, ch, cfg, epoch=0)
     compact(t, cfg)
-    d = DerivedTable.create(spark, str(tmp_path / "chunks"), t, CHUNK_SQL)
+    d = DerivedTable.create(spark, str(root / "chunks"), t, CHUNK_SQL)
     d.table.set_props(target_file_rows="100")
     d.sync(t)
     d.compact()
+    return t, d, cfg
 
-    # hottest bucket by on-disk bytes — the skew shape's stand-in
+
+def hot_bucket(t) -> int:
+    """The bucket holding the most live rows — the skew shape's stand-in."""
     snap = t.current()
-    hot = max(range(4), key=lambda b: t.bucket_bytes_estimate(snap, b))
+    b = bucket_expr(snap.layout_cols(), snap.n_buckets).alias("b")
+    counts = t.read().groupBy(b).count().collect()
+    return max(counts, key=lambda r: r["count"])["b"]
 
-    j = colocated_join_many([t, d.table], on=["repo", "path"],
-                            buckets=[hot])
-    plan = j._jdf.queryExecution().executedPlan().toString()
+
+def bucket_files(df, table_dir: str, b: int) -> list[str]:
+    return [f for f in df.inputFiles()
+            if f"/{table_dir}/" in f and f"/_bucket={b}/" in f]
+
+
+def test_hot_bucket_pair_parallelizes_by_file_splits(spark, tmp_path):
+    """Round-4 verdict item 8 (skew x colocated): an aligned join has no
+    shuffle to salt, so a bucket holding the most rows must get its
+    parallelism from FILE-level splits instead. With target_file_rows
+    rolling the writer, the hot bucket's side of the join reads many
+    files (= many scan tasks), the plan stays exchange-free, and the
+    result equals the naive join."""
+    t, d, _ = build_hot_rig(spark, tmp_path)
+    hot = hot_bucket(t)
+
+    j = colocated_join_many([t, d.table], on=["repo", "path"])
+    plan = plan_of(j)
     assert "Exchange hashpartitioning" not in plan, plan[:4000]
-    # parallelism inside the single hot bucket-pair: several file splits
-    # on each side, not one straggler task per side
-    left_files = [f for f in j.inputFiles() if "/repos/" in f]
-    right_files = [f for f in j.inputFiles() if "/chunks/" in f]
+    # parallelism inside the hot bucket-pair: several file splits on
+    # each side, not one straggler task per side
+    left_files = bucket_files(j, "repos", hot)
+    right_files = bucket_files(j, "chunks", hot)
     assert len(left_files) > 2, left_files
     assert len(right_files) > 2, right_files
 
-    from data_migration_service_spark.tables.lake import bucket_expr
-    naive = (t.read().join(
+    naive = t.read().join(
         d.read().withColumnRenamed("lsn", "lsn_r1"), ["repo", "path"])
-        .where(bucket_expr(["repo", "path"], 4) == hot))
     cols = sorted(naive.columns)
     a, b = j.select(*cols), naive.select(*cols)
     assert a.count() == b.count() > 0
@@ -322,23 +305,10 @@ def test_optimize_preserves_hot_bucket_file_splits(spark, tmp_path):
     the aligned join stays exchange-free, and results are unchanged."""
     from data_migration_service_spark.operators.merge import rewrite_buckets
 
-    t = make_table(spark, tmp_path, n_buckets=4)
-    t.set_props(target_file_rows="100")
-    cfg = EngineConfig(table_path=str(tmp_path / "repos"), n_buckets=4,
-                       merge_mode="mor", compact_threshold=1)
-    ch = gen_changes(spark, 2000, n_repos=6, n_paths_per_repo=120).cache()
-    cdc_apply(t, ch, cfg, epoch=0)
-    compact(t, cfg)
-    d = DerivedTable.create(spark, str(tmp_path / "chunks"), t, CHUNK_SQL)
-    d.table.set_props(target_file_rows="100")
-    d.sync(t)
-    d.compact()
-
-    snap = t.current()
-    hot = max(range(4), key=lambda b: t.bucket_bytes_estimate(snap, b))
-    before = colocated_join_many([t, d.table], on=["repo", "path"],
-                                 buckets=[hot])
-    before_rows = before.count()
+    t, d, cfg = build_hot_rig(spark, tmp_path)
+    hot = hot_bucket(t)
+    before_rows = colocated_join_many([t, d.table],
+                                      on=["repo", "path"]).count()
 
     # OPTIMIZE both sides under the current layout rules — the writer
     # must keep rolling files at target_file_rows, not coalesce to one
@@ -346,12 +316,11 @@ def test_optimize_preserves_hot_bucket_file_splits(spark, tmp_path):
     rewrite_buckets(d.table, EngineConfig(table_path=str(tmp_path / "chunks"),
                                           merge_mode="mor"))
 
-    j = colocated_join_many([t, d.table], on=["repo", "path"],
-                            buckets=[hot])
-    plan = j._jdf.queryExecution().executedPlan().toString()
+    j = colocated_join_many([t, d.table], on=["repo", "path"])
+    plan = plan_of(j)
     assert "Exchange hashpartitioning" not in plan, plan[:4000]
-    left_files = [f for f in j.inputFiles() if "/repos/" in f]
-    right_files = [f for f in j.inputFiles() if "/chunks/" in f]
+    left_files = bucket_files(j, "repos", hot)
+    right_files = bucket_files(j, "chunks", hot)
     assert len(left_files) > 2, left_files
     assert len(right_files) > 2, right_files
     assert j.count() == before_rows > 0

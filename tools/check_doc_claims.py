@@ -40,7 +40,7 @@ PKG = "data_migration_service_spark"
 def _defs(path: str) -> set[str]:
     """Top-level function/class names + methods + module-level constants
     (assigned names), one parse, no import — docs legitimately cite
-    constants like `colocated.BROADCAST_EXPANSION`."""
+    constants like `merge.PROBE_KEY_CAP`."""
     with open(path) as f:
         tree = ast.parse(f.read())
     out: set[str] = set()
